@@ -61,8 +61,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, gate-priority
-    order (the driver records correctness for the first 50)."""
+    """One entry per implemented operator from SURVEY.md §2, in name
+    order (``finalize_registry``), whichever query module loaded first."""
     finalize_registry()
     return {name: _with_shipping(fn) for name, fn in QUERIES.items()}
 

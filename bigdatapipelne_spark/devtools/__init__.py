@@ -1,2 +1,2 @@
-"""Development-time tooling (gate-churn analysis); not part of the engine
-runtime surface."""
+"""Development-time tooling (drift-normalized bench-record compare); not
+part of the engine runtime surface."""

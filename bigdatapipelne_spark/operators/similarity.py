@@ -646,9 +646,11 @@ def ivf_insert(
     (.sample(), unordered .limit()) can never make the recorded count
     diverge from the rows actually appended, no second Arrow pass is
     paid, and (unlike the earlier before/after footer-count delta) no
-    two extra listing+count jobs bracket the append. Accumulator
-    updates inside actions are applied exactly once per partition, so
-    task retries/speculation cannot skew the count."""
+    two extra listing+count jobs bracket the append. The count rides the
+    write's result stage, where Spark applies each partition's
+    accumulator update once even if its task is retried or speculated;
+    a re-run shuffle-map stage has no such guarantee, so the observe
+    sits above the repartition exchange."""
     import os
 
     from pyspark.sql import Observation
@@ -667,16 +669,14 @@ def ivf_insert(
         .collect()
     )
     centroids = [list(r.centroid) for r in cents]
+    assigned = new_vectors.select(
+        F.col(id_col), _normalized(vec_col).alias("vn")
+    ).withColumn("cluster", _cell_scores_udf(centroids, 1)(F.col("vn")))
+    # observe above the exchange, as save_ivf_index does (see docstring)
     obs = Observation()
-    assigned = (
-        new_vectors.select(
-            F.col(id_col), _normalized(vec_col).alias("vn")
-        )
-        .withColumn("cluster", _cell_scores_udf(centroids, 1)(F.col("vn")))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-    )
     (
         assigned.repartition(F.col("cluster"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .write.mode("append")
         .partitionBy("cluster")
         .parquet(apath)

@@ -2,8 +2,10 @@
 
 Each entry is a named query over the driver's testdata tables; the Spark
 side is the engine's DataFrame implementation, the oracle side is ANSI SQL
-DuckDB runs on the same parquet. The driver hash-compares the two at
-sf=0.01 (CORRECTNESS_r{N}.json) — see ``__spark_entry__.py``.
+DuckDB runs on the same parquet. ``tests/test_parity.py`` hash-compares the
+two for every registered query that has an oracle (sf0.001);
+``python -m bigdatapipelne_spark.oracle`` runs the same sweep at sf0.01.
+``__spark_entry__.py`` exposes both sides.
 
 Determinism rules used throughout (both sides must produce bit-identical
 values):
@@ -590,530 +592,13 @@ from bigdatapipelne_spark import queries_analytics  # noqa: E402,F401
 from bigdatapipelne_spark import queries_tpch  # noqa: E402,F401
 
 
-# ---------------------------------------------------------------------------
-# Gate ordering. The driver's correctness gate records the FIRST 50 queries
-# in registration order; the repo registers more than 50. This list pins the
-# gated set explicitly so the highest-value evidence (one query per §2
-# operator family, the full TPC-H/analytics surface, and this round's new
-# entries) lands inside the window, independent of module import order.
-# Queries past slot 50 stay registered — covered by the local oracle-parity
-# sweep (tests/test_parity.py) and earlier rounds' green CORRECTNESS rows.
-# ---------------------------------------------------------------------------
-
-# The driver's correctness gate records the first GATE_SLOTS registered
-# queries; _GATE_PRIORITY must pin exactly that many (asserted in
-# tests/test_gate_churn.py) so the gated set is explicit, not accidental.
-GATE_SLOTS = 50
-
-_GATE_PRIORITY = [
-    # -----------------------------------------------------------------
-    # ROUND 6 — churn-aware gating (verdict item 3). The gate now leads
-    # with every query whose reachable implementation changed since its
-    # last driver-green row (devtools/churn.py computes the set;
-    # tests/test_gate_churn.py enforces it):
-    #  - doc_quality: round-6 tokenize-once/widen rewrite of the 9.4x
-    #    sf1 outlier;
-    #  - text_stats + the quality family: functions/text.py refactor
-    #    (stopword_ratio_from_tokens / quality_from_ratios);
-    #  - fraud/session/dedup/purchase-view stream drains: round-6
-    #    stream-bus seam in read_events_stream (streaming/bus.py);
-    #  - minhash/simhash/winnowing pair miners + embedding_near_dup +
-    #    near_dup_clusters + asof_purchase_view: r03+ edits whose r02
-    #    rows predate them (flagged by the AST diff, never re-driven).
-    # Their 15 slots come from r05-green entries with UNCHANGED code
-    # (q2/q20/q22, cube_order_stats, value_percentiles, engaged_days,
-    # user_scd2, hll_stream_rollup, enriched_stream_drain,
-    # asof_purchase_view_cogroup, user_value_median_udaf,
-    # near_dup_clusters_pd, doc_feature_hash, docs_sample_fraction,
-    # user_type_unpivot) — rows standing, families still anchored (q7/
-    # q11 keep TPC-H; as-of via asof_purchase_view; CC via
-    # near_dup_clusters; SCD2 via store/versioned family + local parity).
-    # ROUND 8 — doc_quality rotates out (r07 green, code unchanged; the
-    # quality family stays anchored by text_stats and doc_repetition
-    # in-gate). Its slot seats exact_dedup, churned by the 2^40
-    # collision-proof synthetic-copy offsets (verdict item 4).
-    # ROUND 13 — exact_dedup rotates out (r12 green, code unchanged this
-    # round; the exact-dedup family stays anchored in-gate by
-    # incremental_dedup, incremental_dedup_indexed and all three exact
-    # drain gates). Its slot seats near_dup_managed_drain, the NEW
-    # self-operating fold gate (round-12 verdict #1): the manifest-
-    # resolved managed drain whose fold POLICY folds, CAS-rotates the
-    # pointer, and resumes the same checkpoint — certified against the
-    # same two-phase oracle as the manual near_dup_fold_drain.
-    "near_dup_managed_drain",
-    # ROUND 11 — text_stats rotates out (r10 green, code unchanged; the
-    # text family stays anchored by doc_repetition and quality_deciles
-    # in-gate). Its slot seats decontaminated_overlap_stream_drain, the
-    # NEW streaming decontamination drain (third standing-index stream
-    # member: per-batch BenchmarkIndex probe with the pinned-budget
-    # zero-index-shuffle audit).
-    "decontaminated_overlap_stream_drain",
-    "embedding_near_dup",
-    "near_dup_clusters",
-    "minhash_near_dups",
-    # ROUND 7 — simhash_sigs rotates out (r06 green, code unchanged;
-    # signatures stay exercised by simhash_near_dups in-gate). Its slot
-    # seats decontaminated_overlap, churned by the window-based doc-freq
-    # cap in decontaminate (one exchange instead of a tokenize-twice
-    # join-back).
-    # ROUND 13 — decontaminated_overlap rotates out (r12 green, code
-    # unchanged this round; decontamination stays anchored in-gate by
-    # decontaminated_overlap_stream_drain). Its slot seats
-    # incremental_dedup_managed_drain, the exact-dedup twin of the NEW
-    # managed-drain gate (manifest resolve -> policy fold -> CAS rotate
-    # -> resumed checkpoint; same two-phase oracle as the manual
-    # incremental_dedup_fold_drain).
-    "incremental_dedup_managed_drain",
-    "simhash_near_dups",
-    # ROUND 15 — asof_purchase_view rotates out (r14 green, code
-    # unchanged this round; the as-of family keeps its fresh r14 row plus
-    # the cogroup twin's oracle in the local parity sweep). Its slot
-    # seats ann_topk_recall: its reachable implementation changed in
-    # round 14 (_topk_recall_certificate's checkpoint, commit 327618a)
-    # while it held no gate slot — the r14 verdict's churn violation
-    # (item 1). This round touches the certificate again (release of the
-    # checkpoint + exact-twin reuse), so the slot is load-bearing twice.
-    "ann_topk_recall",
-    # ROUND 15 — value_anomalies rotates out (r14 green, operators/
-    # profile.py unchanged this round; the profiling family keeps the
-    # fresh row + local parity). Its slot seats ivf_topk_recall — the
-    # same r14 churn violation as ann_topk_recall (certificate changed,
-    # no slot, AND it was rotated out in the same round its code
-    # changed: the worst ordering, per the verdict). Re-gated alongside
-    # this round's second certificate change.
-    "ivf_topk_recall",
-    # ROUND 15 — chunk_dup_docs rotates out (r14 green, the chunk window
-    # rewrite unchanged this round; the text family stays anchored by
-    # doc_repetition and quality_deciles in-gate). Its slot seats
-    # bucketed_join_disk, the third r14 churn violation: its reachable
-    # write_bucketed_table gained align_partitions in 327618a with no
-    # slot — and this round's standing-index write changes reach it
-    # again.
-    "bucketed_join_disk",
-    # ROUND 14 — winnowed_doc_pairs rotates out (r13 green, winnowing
-    # code unchanged this round; pair mining stays anchored in-gate by
-    # minhash_near_dups, simhash_near_dups and ngram_jaccard_pairs).
-    # Its slot seats decon_managed_drain, the benchmark manifest's NEW
-    # gate (round-13 verdict #5): the managed decontamination drain
-    # whose suite lives under the manifest pointer — in-gate sink
-    # compaction, a benchmark_refresh suite-version rotation (v1 -> v2)
-    # mid-sequence, and the resumed checkpoint probing the rotated
-    # generation, pinned pair-for-pair by the two-suite oracle.
-    "decon_managed_drain",
-    # ROUND 15 — the five r13-green queries the partial build round's
-    # rotation dropped in one sweep (r14 verdict item 3) start cycling
-    # back: winnowed_doc_pairs and enriched_stream_drain re-gate first
-    # because their families (winnowing fingerprints; stream-static
-    # broadcast enrichment) have ZERO other in-gate anchor — the other
-    # three drops stay covered by in-gate family twins
-    # (near_dup_clusters_pd by near_dup_clusters's shared recursive-CTE
-    # oracle, store_time_travel by store_vacuum +
-    # stream_versioned_sink_drain, ivf_topk_recall re-gates above).
-    "winnowed_doc_pairs",
-    "enriched_stream_drain",
-    # The sf10 rehearsal's stop-shingle fix (NGRAM_MAX_DOC_FREQ default)
-    # churns every n-gram-index consumer: the pair miner itself, both CC
-    # variants and the min-id dedup view re-gate; user_scd2_stream_drain
-    # re-gates for the swap_parquet relocation its sink now imports.
-    # Slots from exact_stratified_split / mixture_rebalanced /
-    # doc_char_entropy / value_drift_psi (r05 green, code unchanged).
-    "ngram_jaccard_pairs",
-    # ROUND 7 — tfidf_top_terms rotates out (r06 green, code unchanged
-    # this round; the search family stays anchored by bm25_search
-    # in-gate). Its slot goes to incremental_dedup, whose reachable
-    # implementation changed in round 7 (build_fingerprint_index /
-    # incremental_exact_duplicates standing-index split — churn-flagged).
-    "incremental_dedup",
-    # The round-6 local-import fix in the churn walker surfaced two more
-    # stale-evidence queries (their operators changed in r04-5 behind
-    # single-name local imports the old regex mangled): packed_sequences
-    # (operators/packing adaptive buckets) and value_anomalies
-    # (operators/profile mad_outliers). Slots from schema_evolution_disk /
-    # compaction_disk (r04 green, code unchanged; the storage family stays
-    # anchored by card_medallion_disk, bucketed_join_disk, store_vacuum
-    # and store_time_travel).
-    # ROUND 7 — packed_sequences rotates out (r06 green, code unchanged
-    # this round). Its slot seats multimodal_features, churned by the
-    # batched Arrow reduction rewrite of image_features.
-    # ROUND 9 — multimodal_features rotates out (r08 green, code
-    # unchanged; the multimodal surface keeps multimodal_metadata's
-    # lifetime row + pytest coverage). Its slot seats deduped_documents,
-    # churned by the ngram size-riding rewrite.
-    "deduped_documents",
-    # pii_redaction / doc_char_entropy re-gate for the round-6 widen (the
-    # sf10 rehearsal found their regex/char-explode stages one-core on
-    # the narrow scan). Slots from ann_topk_recall / ivf_topk_recall
-    # (r05 green, code unchanged; the ANN certificate family stays
-    # anchored by embedding_ann_recall and ivfpq_topk_recall).
-    # ROUND 8 — pii_redaction rotates out (r07 green, code unchanged;
-    # regex surface keeps local parity). Its slot seats
-    # q2_min_cost_supplier, churned by the round-7 post-gate semi-join
-    # pushdown (the red test_gate_churn finding — verdict item 1).
-    # ROUND 9 — q2_min_cost_supplier rotates out (r08 green, code
-    # unchanged; TPC-H stays anchored by q21_waiting_orders and the
-    # analytics surface in-gate). Its slot seats ann_topk_recall, churned
-    # by the SRP arrow hasher (srp_bucket_ann hashing path).
-    # ROUND 13 — ann_topk_recall rotates out (r12 green, SRP path
-    # unchanged this round; the ANN certificate family stays anchored
-    # in-gate by embedding_ann_recall, ivfpq_topk_recall and both IVF
-    # certs). Its slot seats ivf_insert_topk_recall, the NEW incremental
-    # IVF maintenance certificate: half the corpus arrives assign-only
-    # via ivf_insert, recall floor vs the exact twin + the in-gate
-    # ivf_retrain_due policy trip.
-    "ivf_insert_topk_recall",
-    # ROUND 9 — doc_char_entropy rotates out (r08 green, code unchanged;
-    # the text family stays anchored by text_stats + doc_repetition
-    # in-gate). Its slot seats near_dup_clusters_pd, churned by the
-    # ngram size-riding rewrite (_shingle_hash_rows_with_size feeds its
-    # pair mining).
-    # ROUND 14 (late) — near_dup_clusters_pd rotates out (r13 green, the
-    # pointer-doubling CC code unchanged; CC stays anchored in-gate by
-    # near_dup_clusters, which shares its recursive-CTE oracle). Its slot
-    # seats semdedup_recall, the NEW SemDeDup certificate (Abbas et al.
-    # 2023): cluster-scoped exact-cosine pairs must be a strict SUBSET of
-    # the exact pair set (Catalyst-scorer bit-parity) AND cover >= the
-    # measured recall floor — the hash-checked twin bounding the
-    # rows-only embedding_semdedup production path.
-    "semdedup_recall",
-    # wave-3 narrow-scan widens (doc_chunks 34.6x, doc_repetition 38.0x,
-    # doc_collapse_repeats 27.0x at sf10) re-gate; slots from
-    # medallion_audit / salted_skew_join / stream_versioned_sink_drain
-    # (standing green rows, code unchanged; the medallion chain stays
-    # anchored by card_medallion_disk, skew handling by the executed-plan
-    # tests in test_joins.py, the versioned store by store_vacuum and
-    # store_time_travel).
-    # ROUND 8 — doc_chunks and doc_collapse_repeats rotate out (r07
-    # green, code unchanged; chunking keeps the shared-oracle UDTF twin
-    # in the local sweep, the text family stays anchored by text_stats +
-    # doc_repetition). Their slots seat q21_waiting_orders (churned by
-    # the smax localCheckpoint) and incremental_dedup_indexed (new in
-    # late r7 — no lifetime driver row; the red test_lifetime_coverage
-    # finding).
-    "q21_waiting_orders",
-    "doc_repetition",
-    "incremental_dedup_indexed",
-    # Final wave-3 widens (doc_feature_hash 58.7x, bm25_search 51.2x,
-    # embedding_topk 22.4x, embedding_quantized 24.2x at sf10 — the
-    # embeddings table is also a single row group) re-gate; slots from
-    # incremental_dedup / store_time_travel / incremental_near_dup /
-    # stream_restart_resume_drain (standing green rows, code unchanged;
-    # versioned store stays anchored by store_vacuum, the incremental
-    # dedup family by its r04-r05 rows + local parity, checkpoint resume
-    # by tests/test_streaming.py).
-    # ROUND 11 — doc_feature_hash rotates out (r10 green, code unchanged;
-    # feature hashing keeps local parity via the oracle sweep). Its slot
-    # seats incremental_near_dup_stream_drain, the NEW streaming
-    # standing-index near-dup drain (round-10 verdict #1): the foreachBatch
-    # MinHash probe of the persisted bucketed band index with the
-    # in-stream zero-index-shuffle plan audit + run-ledger maintenance.
-    "incremental_near_dup_stream_drain",
-    "bm25_search",
-    # ROUND 7 — embedding_topk rotates out (r06 green, code unchanged;
-    # the exact-twin family stays anchored by the three recall
-    # certificates and embedding_quantized in-gate). Its slot seats
-    # ivf_index_topk_recall — NEW round-7 query certifying the
-    # persisted-IVF serving path (build -> save -> load -> query) with
-    # the same exact-twin floor as ivf_topk_recall.
-    "ivf_index_topk_recall",
-    # ROUND 8 — embedding_quantized, deduped_documents and
-    # near_dup_clusters_pd rotate out (r07 green, code unchanged;
-    # vectors stay anchored by doc_feature_hash + the recall
-    # certificates, exact dedup by exact_dedup entering this round, CC
-    # by near_dup_clusters in-gate). Their slots seat the three queries
-    # churned by the versioned store's OCC commit_version
-    # (compare-and-swap + append-mode write): store_time_travel,
-    # stream_versioned_sink_drain — store_vacuum was already in-gate —
-    # and purchase_view_outer_drain, churned by the avro codec's varint
-    # int64 bound (_decode_long is in every drain's reachable set via
-    # the bus seam).
-    # ROUND 14 (late) — store_time_travel rotates out (r13 green, the
-    # versioned store unchanged this round; the store family stays
-    # anchored in-gate by store_vacuum and stream_versioned_sink_drain).
-    # Its slot seats embedding_semdedup, the SemDeDup PRODUCTION path
-    # (rows-only by design like the other approximate ANN paths — its
-    # value evidence is the hash-checked semdedup_recall certificate twin
-    # gating above), so the new surface earns a driver row this round.
-    # ROUND 15 — embedding_semdedup rotates OUT (r14 verdict item 2: a
-    # query with err=no_oracle burns a verification slot — the sole
-    # reason r14 fell 50 -> 49). It gets the SAME treatment as the four
-    # older rows-only ANN paths (embedding_ann/embedding_ivf/
-    # embedding_ivfpq/embedding_topk), which are kept out of the window
-    # precisely because they cannot hash-match: its value evidence is
-    # the hash-checked semdedup_recall certificate twin in-gate (strict
-    # subset-ness + recall floor over the same semdedup_pairs core). A
-    # DuckDB oracle was considered and rejected: the survivors depend on
-    # float64 k-means means whose summation ORDER differs across engines
-    # (Spark partition-order avg vs DuckDB's), so cell assignments —
-    # and therefore the survivor set — cannot be made bit-identical
-    # cross-engine without weakening the operator.
-    "stream_versioned_sink_drain",
-    "purchase_view_outer_drain",
-    "user_scd2_stream_drain",
-    "fraud_stream_drain",
-    "session_stream_drain",
-    "stream_dedup_drain",
-    "purchase_view_stream_join",
-    # ROUND 7 — purchase_view_outer_drain rotates out (r06 green, code
-    # unchanged; stream-stream joins stay anchored by
-    # purchase_view_stream_join, and the outer drain's left-eviction
-    # oracle is a subset of the full-outer's). Its slot seats
-    # customer_merge, churned this round: the new-customer slice key is
-    # now the negative mirror (-k-1) instead of +1000000, which collided
-    # with real custkeys at the 100x replica scale and tripped the
-    # strict duplicate-source-key guard.
-    # ROUND 10 — customer_merge rotates out (r07 green, code unchanged
-    # this round; the MERGE family keeps its standing row + local
-    # parity). Its slot seats chunk_dup_docs, churned by the
-    # chunk_duplicate_stats window rewrite (min!=max over the hash
-    # window instead of a doc-freq groupBy joined back — the
-    # no-ReusedExchange hazard tokenized the corpus twice).
-    # ROUND 15 — chunk_dup_docs rotates out; see its seat (bucketed_
-    # join_disk) above.
-    # ROUND 7 — enriched_stream_drain rotates out (r06 green; this
-    # round's bus.py edits touch only the avro decode_payload/
-    # encode_payload branches, which no file-format drain reaches — the
-    # churn walk confirms no drain churned; streaming stays anchored by
-    # the fraud/session/dedup/purchase-view drains in-gate). Its slot
-    # goes to incremental_near_dup_indexed — NEW round-7 query
-    # certifying the persisted standing-index probe path end-to-end
-    # (same oracle as incremental_near_dup; the probe plan reads zero
-    # corpus text).
-    "incremental_near_dup_indexed",
-    # ROUND 15 — hll_stream_rollup rotates out (r14 green, code
-    # unchanged this round; the sketch family keeps the fresh row plus
-    # hll_users_rollup's standing bounded-error row). Its slot funds the
-    # r13-drop re-gating above (enriched_stream_drain).
-    # store_vacuum: round-6 version-retention certificate (gc_versions
-    # keep-last-N + bit-identical retained reads), new query.
-    "store_vacuum",
-    # Reference-parity core: all six anchors (stage_events, spec_rollup,
-    # global_agg, fraud_windows, fraud_literal, serving_ttl) rotate out
-    # this round — their round-2 green rows stand, code unchanged, and
-    # card_medallion_disk keeps the medallion chain certified in-gate.
-    # Their slots go to the late-round-3 operators below.
-    # TPC-H-style analytics surface. After round 3 every one of the 22 has
-    # a green driver row; 12 rotate out this round (rows standing, code
-    # unchanged) to give their slots to the 10 queries that have NEVER had
-    # a driver row plus the two new ANN recall certificates. Five stay as
-    # family anchors: correlated subquery (q2), multi-join volume (q7),
-    # global-scalar HAVING (q11), semi-join chain (q20), anti-join +
-    # scalar avg (q22).
-    # ROUND 10 — q11_value_concentration rotates out (standing green row,
-    # code unchanged; TPC-H stays anchored by q21_waiting_orders in-gate
-    # plus the q2/q20/q22 standing rows). Its slot seats ivf_topk_recall,
-    # churned by the round-10 _dedup_and_rank_topk fusion in ivf_topk
-    # (one exchange for the pair dedup + rank window instead of two).
-    # ROUND 14 — ivf_topk_recall rotates out (r13 green; ivf_topk itself
-    # is unchanged this round — the IVF meta/manifest edits touch only
-    # the persisted-index paths, and those re-gate below via
-    # ivf_index_topk_recall + ivf_insert_topk_recall; the IVF family
-    # stays anchored in-gate by both plus ivfpq_topk_recall). Its slot
-    # seats managed_ivf_insert_recall, the NEW managed-ingestion gate
-    # (round-13 verdict #1): run_managed_ivf_insert resolves the
-    # manifest pointer, inserts assign-only, the drift policy retrains
-    # + CAS-rotates MID-SEQUENCE, and the recall certificate is served
-    # from the post-retrain generation.
-    "managed_ivf_insert_recall",
-    # incremental_near_dup re-gates for the late-round-6 minhash rework
-    # (tokenize-once hash-row reuse, seeded-md5-over-shingle-hash
-    # signatures — the oracle mirrors the new scheme — band-bucket cap,
-    # lossless length prefilter). Slot from q7_nation_volume (r05 green,
-    # code unchanged; TPC-H stays anchored by q11 in-gate plus the
-    # q2/q20/q22 standing rows).
-    "incremental_near_dup",
-    # Never-gated until now (registration slots 51+ in r02 and r03): CUBE,
-    # exact percentiles, INTERSECT, the batch SCD2 snapshot, the streaming
-    # sketch store, stream-static enrichment, the cogrouped as-of twin,
-    # the Pandas UDAF, pointer-doubling CC, feature hashing — every
-    # registered query now has a driver row within r02-r04.
-    # Round-4 additions: recall certificates for the top-k ANN paths (the
-    # last rows-only evidence on the ANN surface becomes value-checked)
-    # and the corpus-selection family (quality-ranked dedup
-    # representative, distributed-prefix-sum token budgeting, md5-coin
-    # stratified sampling). Their slots come from q6_forecast_revenue /
-    # user_moving_avg / top_parts_per_brand rotating out with standing
-    # r03 rows (window-family coverage stays via customer_order_gaps and
-    # purchase_only_days).
-    "deduped_best_quality",
-    "corpus_budget_select",
-    # exact_stratified_split: exact-count per-stratum 80/10/10 at integer
-    # rank boundaries (Bernoulli hash splits drift binomially on small
-    # strata); slot from user_scd2_stream_drain (standing r03 row; SCD2
-    # stays gated via user_scd2).
-    # ...plus domain-mixture rebalancing and the char-entropy quality
-    # signal (slots from lineitem_profile/price_histogram, r03 rows
-    # standing; the profiling family stays gated via value_percentiles,
-    # value_anomalies and cube_order_stats).
-    # Round-4 wave 2: span-level cross-doc dedup, consecutive-repeat
-    # collapse, exact MG heavy hitters, vocabulary coverage, and
-    # delta-vs-corpus incremental dedup. Their slots come from
-    # events_time_rollup / value_anomalies / purchase_funnel /
-    # golden_events / customer_merge rotating out with standing r03 rows
-    # (code unchanged; the MERGE/funnel families keep local parity
-    # coverage and customer_merge's oracle still runs in the sweep).
-    "frequent_tokens",
-    # Round-4 wave 3: A-ES weighted sampling, unigram-LM perplexity-proxy
-    # scoring, PSI drift monitoring. Slots from user_type_pivot /
-    # purchase_only_days / customer_order_gaps (standing r03 rows, code
-    # unchanged; pivot/rollup stays gated via priority_rollup and
-    # cube_order_stats, set-ops via engaged_days, windows via user_scd2
-    # and value_percentiles).
-    "weighted_docs_sample",
-    # weighted_sample_per_lang: the per-stratum A-ES form; slot from
-    # purchase_view_outer_drain, whose left-eviction oracle is literally a
-    # subset of the in-gate full-outer drain (standing r03 row).
-    # ROUND 11 — weighted_sample_per_lang rotates out (r10 green, code
-    # unchanged; sampling stays anchored by weighted_docs_sample in-gate).
-    # Its slot seats q11_value_concentration, churned by the
-    # eager_checkpoint memory-posture refactor (operators/checkpoint.py).
-    # ROUND 12 — q11_value_concentration rotates out (r11 green, code
-    # unchanged this round; TPC-H stays anchored by q21_waiting_orders
-    # and q20_dominant_suppliers in-gate). Its slot seats
-    # near_dup_fold_drain, the NEW ledger-compaction gate query (round-11
-    # verdict #1): a mid-stream fold_ledger_into_index between two drain
-    # phases, certified against a two-phase oracle — fold == rebuilt,
-    # promoted-ledger pairs land in corpus_pairs, the plan audit runs on
-    # the FOLDED layout, and the sink is compacted in-gate.
-    "near_dup_fold_drain",
-    # store_time_travel certifies VERSION-AS-OF snapshot isolation on the
-    # versioned store; its slot comes from approx_users_per_type (standing
-    # r03 row; the HLL family stays gated via hll_users_rollup).
-    # incremental_near_dup: the steady-state MinHash probe of a standing
-    # corpus band index; slot from value_percentiles_approx (standing r03
-    # row; percentile family stays gated via value_percentiles).
-    # bucketed_join_disk: zero-shuffle co-located fact-fact join from disk,
-    # plan-asserted inside the query; slot from priority_rollup (standing
-    # r03 row; grouping-sets family stays gated via cube_order_stats).
-    # ROUND 11 — bucketed_join_disk rotates out (r10 green, code
-    # unchanged; the storage family stays anchored by card_medallion_disk,
-    # store_vacuum and store_time_travel in-gate). Its slot seats
-    # q20_dominant_suppliers, churned by the same checkpoint refactor.
-    # ROUND 12 — q20_dominant_suppliers rotates out (r11 green, code
-    # unchanged this round; TPC-H stays anchored by q21_waiting_orders
-    # in-gate plus the q2/q11/q22 standing rows). Its slot seats
-    # incremental_dedup_fold_drain, the NEW exact-dedup ledger-compaction
-    # twin: fold_seen_into_fingerprint_index between two drain phases,
-    # with the +2^41 re-crawls' status flipping to dup_in_corpus ONLY if
-    # the fold really promoted the admitted fingerprints (two-phase
-    # oracle).
-    "incremental_dedup_fold_drain",
-    # Storage certifications: schema evolution under mergeSchema,
-    # small-file compaction, and the stream->versioned-store sink (each
-    # fails loudly in-query on a layout/visibility regression). Slots from
-    # embedding_quantized / bm25_search / docs_sample_per_group (standing
-    # r03 rows; sampling stays gated via docs_sample_fraction and
-    # weighted_docs_sample, vectors via doc_feature_hash).
-    # stream_restart_resume_drain: exactly-once across a checkpoint-resumed
-    # restart (W5/W6 promoted to driver-gated evidence); slot from
-    # stream_dedup_drain (standing r03 row, code unchanged).
-    # medallion_audit: per-batch row reconciliation across raw->stage->spec;
-    # slot from multimodal_features (standing r03 row, code unchanged).
-    # quality_deciles (exact global rank via the distributed two-pass
-    # prefix pattern, integer-arithmetic decile) and user_type_unpivot
-    # (pivot -> melt round-trip). Slots from lineitem_quality and
-    # packed_sequences (standing r03 rows, code unchanged).
-    "quality_deciles",
-    # ROUND 8 — doc_unigram_logprob rotates out (r07 green, code
-    # unchanged; the frequency family stays anchored by frequent_tokens
-    # and bm25_search in-gate). Its slot seats simhash_sigs, churned by
-    # the conv-word vote-bit extraction (bit-identical by construction,
-    # but the churn guard rightly demands fresh driver evidence).
-    # ROUND 10 — simhash_sigs rotates out (r09 green, code unchanged
-    # this round; signatures stay exercised by simhash_near_dups
-    # in-gate). Its slot seats incremental_dedup_stream_drain, the NEW
-    # streaming standing-index probe gate query (verdict #3) — no
-    # lifetime row yet, so it must gate this round. The round's other 15
-    # churned queries (run_available_now state-partition knob, dedup
-    # window rewrites, store gc grace, SRP hasher null filter) all
-    # already hold slots.
-    "incremental_dedup_stream_drain",
-    # top_customers, distinct_parts_per_brand, user_running_total and
-    # user_sessions rotate out (round-2 green rows stand, code unchanged)
-    # Analytics beyond TPC-H (windows, rollup/cube/pivot, percentiles,
-    # set ops, skew handling, profiling)
-    # session_window_stream_drain: the BUILT-IN streaming session operator
-    # with its own (watermark-only) emission rule; slot from the custom
-    # session_stream_drain (standing r03 row, code unchanged — the two
-    # drains share one session construction, different emission oracles).
-    "session_window_stream_drain",
-    # cube_order_stats, engaged_days and value_percentiles rotate to the
-    # local sweep: the grouping-sets / set-op families stay gated via
-    # priority_rollup, user_type_pivot and purchase_only_days, and exact
-    # percentile() is still driver-exercised inside
-    # value_percentiles_approx's rank brackets.
-    # LLM-pipeline + multimodal entries needing fresh driver evidence
-    # (near_dup_clusters rotates out; its round-2 row stands and the
-    # pointer-doubling twin shares its oracle in the local sweep)
-    # embedding_near_dup rotates out (round-2 green row; the sf0.01 gate
-    # can't exercise this round's >100k-row auto-routing anyway — local
-    # parity covers it)
-    "embedding_ann_recall",
-    # IVF-PQ: two-level quantization (coarse cells + product codes + exact
-    # re-rank); the recall certificate is hash-checked, the top-k itself is
-    # rows-only like the other approximate paths. Slot from
-    # hll_users_rollup (standing r03 row; the sketch family keeps its r03
-    # bounded-error row). embedding_ivfpq itself rotates OUT this round:
-    # it is no-oracle-by-design (approximate top-k), its driver evidence
-    # is the hash-checked ivfpq_topk_recall twin below, and its r04 row
-    # stands. Its slot goes to lang_confusion — the one registered query
-    # that had never been inside a gate window.
-    "ivfpq_topk_recall",
-    # ROUND 8 — lang_confusion rotates out (r07 green, code unchanged;
-    # LID keeps local parity). Its slot seats enriched_stream_drain,
-    # churned by the avro varint bound like the other drains (its r06
-    # row predates _decode_long's new int64 guard).
-    # ROUND 14 (late) — enriched_stream_drain rotates out (r13 green,
-    # code unchanged this round; streaming stays anchored in-gate by the
-    # fraud/session/dedup/purchase-view/SCD2/versioned-sink drains, and
-    # stream-static enrichment's broadcast join shape is pinned in
-    # test_streaming.py). Its slot seats dsir_selected, the NEW DSIR
-    # data-selection gate (Xie et al. 2023): hashed unigram+bigram
-    # importance weights vs a target sample, fully replayed by the DuckDB
-    # oracle through the cross-engine md5->BIGINT hash idiom.
-    "dsir_selected",
-    # Streaming / pipeline anchors + round-3 additions. card_medallion_disk
-    # supersedes card_spec_mart in-gate (same oracle, adds the disk
-    # round-trip); card_spec_mart, serving_upsert and fraud_stream_drain
-    # rotate out with their round-2 green rows standing (code unchanged).
-    # full-outer completes the hash-checked stream-stream join matrix; slot
-    # from purchase_view_interval_join (standing r03 row, code unchanged).
-    "purchase_view_full_outer_drain",
-    "card_medallion_disk",
-    # Late round-3 operators (SCD2 family, quality contract, quantization,
-    # exact-count sampling, BM25) — the slots freed above. Plain user_scd2
-    # rotates out: user_scd2_incremental exercises scd2_snapshot AND
-    # scd2_merge against the SAME oracle, so the snapshot path stays
-    # certified through it (plus the local parity sweep).
-    # Newest round-3 operators: funnel attribution, golden-record entity
-    # resolution, multi-grain time rollup, sequence packing, robust
-    # anomaly detection, mergeable-HLL rollup, and the end-to-end corpus
-    # pipeline — the slots freed above.
-    "corpus_pipeline",
-]
-
-
-def _reorder_for_gate(strict: bool = True) -> None:
-    missing = [n for n in _GATE_PRIORITY if n not in QUERIES]
-    if missing and strict:  # fail loudly: a typo here silently ungates a query
-        raise KeyError(f"_GATE_PRIORITY names not registered: {missing}")
-    ordered = [n for n in _GATE_PRIORITY if n in QUERIES] + [
-        n for n in QUERIES if n not in set(_GATE_PRIORITY)
-    ]
-    for d in (QUERIES, ORACLE):
-        snapshot = dict(d)
-        d.clear()
-        d.update({n: snapshot[n] for n in ordered if n in snapshot})
-
-
 def finalize_registry() -> None:
-    """Strict gate ordering — called at every driver-contract read point
-    (__spark_entry__, oracle harness, bench). Import-time reordering below
-    is non-strict because a test importing a query module directly leaves
-    this module's re-imports partially initialized (circular import); by
-    the time anything READS the registry, all modules are complete and a
-    missing _GATE_PRIORITY name is a real error."""
-    _reorder_for_gate(strict=True)
-
-
-# Non-strict at import: see finalize_registry.
-_reorder_for_gate(strict=False)
+    """Sort ``QUERIES`` and ``ORACLE`` by name, in place. Registration
+    order depends on which query module is imported first; the name
+    order is the same whichever it is (and is the order
+    tests/test_parity.py sweeps). Called at every read point of the
+    registry: ``__spark_entry__``, the oracle harness and the benches."""
+    for d in (QUERIES, ORACLE):
+        snapshot = sorted(d.items())
+        d.clear()
+        d.update(snapshot)

@@ -374,6 +374,14 @@ def run_near_dup_probe_stream(
     }
 
     def _probe_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # The ledger guard runs first, so an idle stream with an
+        # over-limit ledger still raises.
+        _guard_ledger(
+            spark,
+            os.path.join(out_root, ledger_subdir),
+            max_ledger_bytes,
+            "fold_ledger_into_index",
+        )
         # Empty micro-batch (idle trigger / empty staged file): nothing to
         # probe, nothing to admit, and skipping the writes leaves every
         # sink byte-identical (a _write_batch of an empty frame creates no
@@ -383,12 +391,6 @@ def run_near_dup_probe_stream(
         # empty batch skips again.
         if batch_df.isEmpty():
             return
-        _guard_ledger(
-            spark,
-            os.path.join(out_root, ledger_subdir),
-            max_ledger_bytes,
-            "fold_ledger_into_index",
-        )
         shb = (
             _shingle_hash_rows(batch_df, "doc_id", "text")
             .withColumnRenamed("doc_id", "delta_id")
@@ -725,12 +727,12 @@ def run_exact_probe_stream(
     seen_dir = os.path.join(out_root, seen_subdir)
 
     def _probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # idle trigger: sinks byte-identical
-            return
         _guard_ledger(
             spark, seen_dir, max_ledger_bytes,
             "fold_seen_into_fingerprint_index",
         )
+        if batch_df.isEmpty():  # idle trigger: sinks byte-identical
+            return
         bk = batch_df.select("doc_id", fingerprint("text").alias("__fp"))
         bk = bk.select(
             "doc_id",

@@ -536,8 +536,8 @@ def test_ledger_guard_trips_with_fold_instruction(spark, tmp_path):
     """Round-12 verdict #3: an over-grown ledger aborts the drain at
     batch start with a descriptive error naming the fold — the exact
     drain's forced-broadcast probe must never be allowed to grow toward
-    an executor OOM. Batch 1 (no ledger yet) passes; batch 2 sees the
-    admitted ledger over the 1-byte guard and trips."""
+    an executor OOM. Batch 1 (no ledger yet) passes; batch 2 is empty,
+    sees the admitted ledger over the 1-byte guard and trips."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from bigdatapipelne_spark.operators.dedup import (
@@ -561,10 +561,9 @@ def test_ledger_guard_trips_with_fold_instruction(spark, tmp_path):
             str(tmp_path / "fpix"),
         )
         staging = str(tmp_path / "staging")
-        stage_ordered_files(
-            [fresh.filter(F.col("doc_id") % 2 == r) for r in range(2)],
-            staging,
-        )
+        # the second staged file is empty: the guard must still trip on
+        # a batch that has nothing to probe
+        stage_ordered_files([fresh, fresh.limit(0)], staging)
         with pytest.raises(StreamingQueryException) as exc:
             run_exact_probe_stream(
                 spark, staging, name, str(tmp_path / "out"),
@@ -578,7 +577,8 @@ def test_ledger_guard_trips_with_fold_instruction(spark, tmp_path):
 
 def test_near_dup_ledger_guard_trips(spark, tmp_path):
     """The MinHash drain's guard twin (perf posture, not OOM bound):
-    same batch-start trip naming fold_ledger_into_index."""
+    same batch-start trip naming fold_ledger_into_index, on an empty
+    second batch too."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from bigdatapipelne_spark.operators.checkpoint import release_checkpoint
@@ -601,10 +601,9 @@ def test_near_dup_ledger_guard_trips(spark, tmp_path):
         save_near_dup_index(ix, name, str(tmp_path / "ndix"))
         release_checkpoint(ix.shingles)
         staging = str(tmp_path / "staging")
-        stage_ordered_files(
-            [fresh.filter(F.col("doc_id") % 2 == r) for r in range(2)],
-            staging,
-        )
+        # the second staged file is empty: the guard must still trip on
+        # a batch that has nothing to probe
+        stage_ordered_files([fresh, fresh.limit(0)], staging)
         with pytest.raises(StreamingQueryException) as exc:
             run_near_dup_probe_stream(
                 spark, staging, name, str(tmp_path / "out"),
