@@ -26,17 +26,21 @@ def _ensure_package_shipped(spark: SparkSession) -> None:
     import ``bigdatapipelne_spark`` — true automatically when the driver
     process runs with the repo as cwd/PYTHONPATH, but not guaranteed for
     an external harness. Shipping the zip makes the contract
-    self-contained; harmless when the module is already importable."""
+    self-contained; harmless when the module is already importable. The
+    zip's temp directory is removed when the interpreter exits."""
     sc = spark.sparkContext
     if getattr(sc, "_bdp_pkg_shipped", False):
         return
+    import atexit
     import shutil
     import tempfile
 
     import bigdatapipelne_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(bigdatapipelne_spark.__file__))
-    zip_base = os.path.join(tempfile.mkdtemp(prefix="bdp_pkg_"), "bigdatapipelne_spark")
+    tmp = tempfile.mkdtemp(prefix="bdp_pkg_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    zip_base = os.path.join(tmp, "bigdatapipelne_spark")
     zpath = shutil.make_archive(
         zip_base, "zip", root_dir=os.path.dirname(pkg_dir),
         base_dir="bigdatapipelne_spark",

@@ -6,9 +6,13 @@ table (or runs a key query when ``Key`` is passed), POST puts an item,
 PUT updates it, DELETE removes it, and every response is shaped as
 ``{statusCode, body, headers}`` with 400 for errors. This module
 reproduces exactly that contract over the engine's bucket-partitioned
-parquet store (operators/serving.py) — key lookups prune to one bucket
-directory, puts/deletes touch only the buckets their keys hash into, so
-every verb is O(batch), never O(table).
+parquet store (operators/serving.py). A GET with ``Key`` is an Arrow read
+of the one bucket directory the key hashes into (``bucket_of_value``),
+filtered on the key and rendered as Spark's ``toJSON`` would; it launches
+no Spark job. Puts and deletes take the store schema from a parquet footer
+(``store_schema``) and rewrite only the buckets their keys hash into, so
+every keyed verb is O(batch), never O(table). A GET without ``Key`` is a
+Spark full scan.
 
 The event shape mirrors API Gateway's Lambda proxy integration:
 
@@ -19,25 +23,140 @@ The event shape mirrors API Gateway's Lambda proxy integration:
     {"httpMethod": "DELETE", "body": '{"TableName": "alerts",
         "Key": {"user_id": 42}}'}
 
+Reader contract: a merge rewrites its buckets with a dynamic partition
+overwrite, which is not atomic for readers (a read during the swap can
+see a bucket missing or half written). This shim runs its handlers and
+the drains that merge into the store in one thread, so GETs are
+serialized with merges. A deployment that serves reads while merges run
+needs the versioned store (``sources/store.py``), whose readers see one
+committed snapshot.
+
 This is a single-process shim for parity/testing — fronting it with a
 real HTTP server is deployment plumbing, not engine semantics.
 """
 
 from __future__ import annotations
 
+import base64
+import datetime
 import json
+import math
 import os
+import re
 from dataclasses import dataclass
+from zoneinfo import ZoneInfo
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from bigdatapipelne_spark.operators.serving import (
     BUCKET_COL,
     SERVING_BUCKETS,
+    bucket_of_value,
     delete_from_store,
     merge_into_store,
+    store_schema,
 )
+
+# Spark writes timestamps as INT96 by default; read them at Spark's own
+# microsecond precision.
+_PARQUET = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
+_INT_BITS = {"int": 32, "bigint": 64}
+_TRIM = "".join(map(chr, range(0x21))) + "\x7f"  # what Spark trims off a cast string
+
+
+def _cast_key(value, key_type: str, ansi: bool):
+    """``CAST(lit(value) AS key_type)`` as Spark evaluates it: None where
+    Spark gives null, ValueError where ANSI mode raises."""
+    if value is None:
+        return None
+    if key_type == "string" and isinstance(value, (str, int)):
+        return str(value).lower() if isinstance(value, bool) else str(value)
+    if key_type not in _INT_BITS or not isinstance(value, (str, int)):
+        raise TypeError(f"cannot look up a {type(value).__name__} key in a {key_type} column")
+    half = 1 << _INT_BITS[key_type] - 1
+    if isinstance(value, str):
+        # ANSI takes a sign and digits; otherwise a fraction is truncated
+        pattern = r"([+-]?)([0-9]+)" if ansi else r"([+-]?)(?=.)([0-9]*)(?:\.[0-9]*)?"
+        m = re.fullmatch(pattern, value.strip(_TRIM))
+        n = int(m[1] + (m[2] or "0")) if m else None
+    else:
+        n = int(value) if ansi else (int(value) + half) % (2 * half) - half  # narrowing
+    if n is not None and -half <= n < half:
+        return n
+    if ansi:
+        raise ValueError(f"[CAST_INVALID_INPUT] The value {value!r} cannot be cast to "
+                         f"{key_type.upper()}")
+    return None
+
+
+def _zone(name: str) -> datetime.tzinfo:
+    m = re.fullmatch(r"(?:UTC|GMT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?(\d{2}))?", name)
+    if m:
+        sign, h, mi, sec = m.groups()
+        off = datetime.timedelta(hours=int(h), minutes=int(mi or 0), seconds=int(sec or 0))
+        return datetime.timezone(-off if sign == "-" else off)
+    return datetime.timezone.utc if name == "Z" else ZoneInfo(name)
+
+
+def _clock(t: datetime.datetime) -> str:
+    return (f"{t.year:04d}-{t.month:02d}-{t.day:02d}T{t.hour:02d}:{t.minute:02d}:"
+            f"{t.second:02d}.{t.microsecond // 1000:03d}")
+
+
+def _offset(t: datetime.datetime) -> str:
+    secs = int(t.utcoffset().total_seconds())
+    if secs == 0:
+        return "Z"
+    sign, secs = "-" if secs < 0 else "+", abs(secs)
+    out = f"{sign}{secs // 3600:02d}:{secs // 60 % 60:02d}"
+    return out + (f":{secs % 60:02d}" if secs % 60 else "")
+
+
+def _json_value(v, t: T.DataType, tz: datetime.tzinfo):
+    """One Arrow value as ``json.loads`` reads Spark's ``toJSON`` of it:
+    null struct fields dropped, timestamps in the session time zone with
+    millisecond precision, dates as yyyy-MM-dd, NaN and infinities as
+    strings, binary as base64."""
+    if v is None:
+        return None
+    if isinstance(t, (T.DoubleType, T.FloatType)):
+        if math.isnan(v) or math.isinf(v):
+            return "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        if isinstance(t, T.FloatType):
+            import numpy as np
+
+            return float(str(np.float32(v)))  # Java's Float.toString digits
+        return v
+    if isinstance(t, (T.StringType, T.BooleanType, T.IntegralType)):
+        return v
+    if isinstance(t, T.TimestampType):
+        local = (v if v.tzinfo else v.replace(tzinfo=datetime.timezone.utc)).astimezone(tz)
+        return _clock(local) + _offset(local)
+    if isinstance(t, T.TimestampNTZType):
+        return _clock(v)
+    if isinstance(t, T.DateType):
+        return v.isoformat()
+    if isinstance(t, T.DecimalType):
+        return int(v) if t.scale == 0 else float(v)
+    if isinstance(t, T.BinaryType):
+        return base64.b64encode(v).decode()
+    if isinstance(t, T.ArrayType):
+        return [_json_value(e, t.elementType, tz) for e in v]
+    if isinstance(t, T.StructType):
+        return {f.name: _json_value(v[f.name], f.dataType, tz)
+                for f in t.fields if v[f.name] is not None}
+    if isinstance(t, T.MapType) and isinstance(t.keyType, (T.StringType, T.IntegralType)):
+        return {str(k): _json_value(x, t.valueType, tz) for k, x in v}
+    raise TypeError(f"no JSON rendering for {t.simpleString()}")
+
+
+def _reply(items: list) -> dict:
+    return {"Items": items, "Count": len(items)}
 
 
 def respond(err: Exception | None, res=None) -> dict:
@@ -68,40 +187,42 @@ class ServingApi:
 
     # -- engine-side operations ------------------------------------------
 
-    def _read(self, spec: TableSpec) -> DataFrame:
-        return self.spark.read.parquet(spec.path)
-
-    def _rows(self, df: DataFrame) -> list[dict]:
+    def _scan(self, spec: TableSpec) -> dict:
+        if not os.path.exists(spec.path):
+            return _reply([])
+        df = self.spark.read.parquet(spec.path).drop(BUCKET_COL)
         # toJSON handles timestamps/decimals; bucket column stays internal
-        return [json.loads(s) for s in df.drop(BUCKET_COL).toJSON().collect()]
+        return _reply([json.loads(s) for s in df.toJSON().collect()])
 
     def _query(self, spec: TableSpec, key_value) -> dict:
         """GET with Key — DynamoDB Query parity (function.py:38-46): the
-        bucket filter uses the same hash expression as the writer, so the
-        scan prunes to one partition directory before the key equality."""
-        if not os.path.exists(spec.path):
-            return {"Items": [], "Count": 0}
-        df = self._read(spec)
-        key_typed = F.lit(key_value).cast(df.schema[spec.key_col].dataType)
-        hit = df.filter(
-            (F.col(BUCKET_COL)
-             == F.pmod(F.xxhash64(key_typed), F.lit(spec.num_buckets)).cast("int"))
-            & (F.col(spec.key_col) == key_typed)
+        key is cast to the key column's type as Spark's ``CAST`` would,
+        hashed to its bucket in Python, and only that bucket directory is
+        read, with Arrow and a key-equality filter. No Spark job runs."""
+        schema = store_schema(spec.path)
+        if schema is None:
+            return _reply([])
+        key_type = schema[spec.key_col].dataType.simpleString()
+        conf = self.spark.conf
+        key = _cast_key(key_value, key_type, conf.get("spark.sql.ansi.enabled") == "true")
+        if key is None:
+            return _reply([])
+        bucket = os.path.join(
+            spec.path, f"{BUCKET_COL}={bucket_of_value(key, key_type, spec.num_buckets)}"
         )
-        items = self._rows(hit)
-        return {"Items": items, "Count": len(items)}
-
-    def _scan(self, spec: TableSpec) -> dict:
-        if not os.path.exists(spec.path):
-            return {"Items": [], "Count": 0}
-        items = self._rows(self._read(spec))
-        return {"Items": items, "Count": len(items)}
+        if not os.path.isdir(bucket):
+            return _reply([])
+        rows = ds.dataset(bucket, format=_PARQUET).to_table(
+            filter=pc.field(spec.key_col) == key
+        ).to_pylist()
+        tz = _zone(conf.get("spark.sql.session.timeZone"))
+        return _reply([_json_value(r, schema, tz) for r in rows])
 
     def _put(self, spec: TableSpec, item: dict) -> dict:
         if spec.key_col not in item:
             raise ValueError(f"Item missing key column {spec.key_col!r}")
-        if os.path.exists(spec.path):
-            schema = self._read(spec).drop(BUCKET_COL).schema
+        schema = store_schema(spec.path)
+        if schema is not None:
             row = self.spark.createDataFrame(
                 [tuple(item.get(f.name) for f in schema.fields)], schema
             )
@@ -128,9 +249,11 @@ class ServingApi:
         [(kcol, kval)] = key.items()
         if kcol != spec.key_col:
             raise ValueError(f"Key must be {spec.key_col!r}, got {kcol!r}")
-        df = self._read(spec)
+        schema = store_schema(spec.path)
+        if schema is None:
+            return {}  # delete_item of a missing item succeeds
         keys = self.spark.createDataFrame(
-            [(kval,)], f"{spec.key_col} {df.schema[spec.key_col].dataType.simpleString()}"
+            [(kval,)], T.StructType([schema[spec.key_col]])
         )
         delete_from_store(
             self.spark, spec.path, keys, [spec.key_col], spec.num_buckets

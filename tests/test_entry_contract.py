@@ -70,3 +70,24 @@ def test_entry_returns_the_spec_rollup(spark):
     assert got.columns == want.columns
     rows = sorted(tuple(r) for r in got.collect())
     assert rows and rows == sorted(tuple(r) for r in want.collect())
+
+
+def test_shipped_package_zip_is_removed_at_exit(tmp_path):
+    """The package zip made for a SparkContext lives in a temp directory
+    that is gone once the interpreter exits."""
+    code = (
+        "import glob, os, tempfile\n"
+        "from pyspark.sql import SparkSession\n"
+        "import __spark_entry__ as contract\n"
+        "spark = SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "contract._ensure_package_shipped(spark)\n"
+        "print(glob.glob(os.path.join(tempfile.gettempdir(), 'bdp_pkg_*', '*.zip')))\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, env=env, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    assert str(tmp_path) in out.splitlines()[-1]  # the zip was made there
+    assert list(tmp_path.glob("bdp_pkg_*")) == []
