@@ -25,6 +25,14 @@ pure Catalyst, bit-deterministic):
 
   Approximate by design -> exercised as a rows-only query (no SQL oracle);
   tests measure recall against ``brute_force_topk`` instead.
+
+The threshold pair miners (``near_duplicate_pairs`` over shards,
+``srp_near_duplicate_pairs`` over SRP buckets, ``semdedup_pairs`` over
+k-means cells) share one exact path, ``_threshold_pairs``: one numpy
+matmul per bucket forwards the candidates at or just below the
+threshold, and the Catalyst fold rescores them and decides the boundary.
+Each miner therefore emits the all-pairs fold's pairs, or a subset of
+them, with the fold's cosine bits.
 """
 
 from __future__ import annotations
@@ -159,9 +167,11 @@ def near_duplicate_pairs(
 ) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold — exact baseline.
 
-    Quadratic by construction; guarded so nobody points it at a corpus.
-    At scale use ``srp_bucket_ann`` for the pairing and keep this
-    scoring/filter stage unchanged."""
+    Quadratic by construction; guarded so nobody points it at a corpus
+    (the scale paths are ``srp_near_duplicate_pairs`` and
+    ``semdedup_pairs``). The a-side hashes into one shard per core and
+    the b-side replicates per shard, so every unordered pair is scored
+    exactly once by ``_threshold_pairs``."""
     n = df.count()
     if n > NEAR_DUP_MAX_ROWS:
         raise ValueError(
@@ -169,71 +179,7 @@ def near_duplicate_pairs(
             f"(max {NEAR_DUP_MAX_ROWS}); use srp_bucket_ann for the "
             "candidate generation instead"
         )
-    # Norms once per row (not per pair); repartition the streamed side — a
-    # single-file corpus arrives as one partition and would serialize the
-    # whole O(N^2) scoring onto one core. The partition count is PINNED:
-    # an un-numbered repartition is AQE-coalescable, and since the shuffled
-    # bytes are tiny (N rows) while the downstream work is O(N^2), AQE's
-    # size-based estimate would collapse it back to one partition — a
-    # measured 12x slowdown at sf0.1.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    a = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), l2_norm(vec_col).alias("na")
-    ).repartition(par, F.col("id_a"))
-    b = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), l2_norm(vec_col).alias("nb")
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_from_norms("va", "vb", "na", "nb"))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def near_duplicate_pairs_fast(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    margin: float = 1e-6,
-    n_shards: int | None = None,
-) -> DataFrame:
-    """Bit-identical to ``near_duplicate_pairs`` — same pair set, same
-    Catalyst-fold ``cosine`` doubles — at a fraction of the cost. Two
-    stages (guide §4.2: vectorize the quadratic term, keep the
-    bit-deterministic expression on the pairs that matter):
-
-    1. CANDIDATES: the O(N^2) scoring runs as one numpy matmul per shard
-       (``_score_buckets_pairs_arrow``; the a-side hashes into
-       ``n_shards`` buckets, the b-side replicates per shard, so each
-       unordered pair is scored exactly once) thresholded at
-       ``threshold - margin``.
-    2. RESCORE: the surviving ~k candidate pairs re-derive ``cosine``
-       from the RAW vectors with the exact ``cosine_from_norms`` fold the
-       baseline uses and filter at ``threshold``.
-
-    Stage 1 can only ADD sub-threshold candidates, never lose a true
-    pair: numpy and the Catalyst fold evaluate the same float64 cosine of
-    the same operands, so they differ by summation order alone — bounded
-    by ~n*eps ~ 1e-14 for 64-dim vectors, eight orders of magnitude
-    inside the 1e-6 margin. Stage 2 then decides the threshold boundary
-    with the baseline's own expression, so the emitted set AND scores
-    are bit-equal (pinned by tests/test_llm_ops.py).
-
-    Used by the recall certificates, whose exact twins dominated their
-    cells as interpreted per-pair folds; the production
-    ``near_duplicate_pairs`` keeps its single-expression form."""
-    n = df.count()
-    if n > NEAR_DUP_MAX_ROWS:
-        raise ValueError(
-            f"near_duplicate_pairs_fast is O(N^2) and input has {n} rows "
-            f"(max {NEAR_DUP_MAX_ROWS}); use srp_bucket_ann for the "
-            "candidate generation instead"
-        )
-    spark = df.sparkSession
-    shards = int(n_shards or spark.sparkContext.defaultParallelism)
+    shards = df.sparkSession.sparkContext.defaultParallelism
     a_side = df.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
@@ -246,14 +192,50 @@ def near_duplicate_pairs_fast(
         l2_norm(vec_col).alias("nb"),
         F.explode(F.array(*[F.lit(i) for i in range(shards)])).alias("bucket"),
     )
+    return _threshold_pairs(df, id_col, vec_col, a_side, b_side, threshold)
+
+
+# How far below the threshold the vectorized candidate stage cuts. numpy
+# and the Catalyst fold evaluate the same float64 cosine of the same
+# operands and differ by summation order alone, bounded by ~dim*eps
+# (~1e-14 at 64 dims): eight orders of magnitude inside this margin.
+CANDIDATE_MARGIN = 1e-6
+
+
+def _threshold_pairs(
+    vectors: DataFrame,
+    id_col: str,
+    vec_col: str,
+    a_side: DataFrame,
+    b_side: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """The one exact path of the threshold pair miners, in two stages
+    (filter, then verify):
+
+    1. CANDIDATES: ``_score_buckets_pairs_arrow`` scores each bucket the
+       sides share as one numpy matmul and forwards every pair whose
+       score is not below ``threshold - CANDIDATE_MARGIN`` — NaN scores
+       (NaN elements, zero norms) included.
+    2. RESCORE: the deduplicated ``(id_a, id_b)`` survivors re-derive
+       ``cosine`` from the RAW vectors in ``vectors`` with
+       ``cosine_from_norms`` over ``l2_norm`` and filter at ``threshold``.
+
+    Stage 1 can only add sub-threshold candidates, never lose a true
+    pair. Stage 2 decides the boundary with the expression the
+    DuckDB-checked ``embedding_near_dup`` uses, so every emitted pair
+    carries the all-pairs fold's cosine bits: Spark orders NaN above
+    every value, so NaN pairs are emitted, and under ANSI a zero norm
+    raises DIVIDE_BY_ZERO exactly as the fold does. A miner whose
+    buckets miss some pairs emits a subset of the exact pair set."""
     cand = _score_buckets_pairs_arrow(
-        a_side, b_side, threshold - margin
-    ).select("id_a", "id_b")
-    a = df.select(
+        a_side, b_side, threshold - CANDIDATE_MARGIN
+    ).dropDuplicates(["id_a", "id_b"])
+    a = vectors.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
         l2_norm(vec_col).alias("na"),
     )
-    b = df.select(
+    b = vectors.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
         l2_norm(vec_col).alias("nb"),
     )
@@ -1090,18 +1072,17 @@ def srp_near_duplicate_pairs(
     probe_bits: int = 1,
     max_bucket_size: int | None = 4096,
     n_tables: int = 1,
-    scorer: str = "catalyst",
     hasher: str = "catalyst",
 ) -> DataFrame:
     """The SCALE path for ``near_duplicate_pairs``: candidate pairs share an
     SRP bucket in one of ``n_tables`` independent tables (one side
-    multi-probes Hamming-1 buckets), each candidate is scored with the
-    exact cosine, then thresholded — same output contract (id_a < id_b,
-    cosine), approximate only in which pairs become candidates. Because
-    scoring is exact, output is always a SUBSET of the exact pair set
-    (precision 1); n_tables trades compute for recall. Cost is
-    L x sum(bucket-size^2), never N^2; recall vs the exact baseline is
-    asserted in tests/test_llm_ops.py and gated as a query
+    multi-probes Hamming-1 buckets), and ``_threshold_pairs`` scores and
+    thresholds them exactly — same output contract (id_a < id_b, cosine),
+    approximate only in which pairs become candidates. Output is always
+    a SUBSET of the exact pair set with bit-equal cosines (precision 1);
+    n_tables trades compute for recall. Cost is L x sum(bucket-size^2),
+    never N^2; recall vs the exact baseline is asserted in
+    tests/test_llm_ops.py and gated as a query
     (queries_llm.embedding_ann_recall).
 
     Candidate-generation intuition: cos >= threshold means the angle is
@@ -1138,24 +1119,7 @@ def srp_near_duplicate_pairs(
         F.col("_norm").alias("na"),
         F.explode(_probe_keys(nbits, n_tables, probe_bits)).alias("bucket"),
     )
-    if scorer == "arrow":
-        # ulp-level score divergence from the Catalyst fold means the
-        # output is no longer guaranteed a strict SUBSET of the exact pair
-        # set at the threshold boundary — callers that assert subset-ness
-        # keep the default scorer; embedding_ann_recall may use arrow
-        # because its semi-join-and-floor form never trusts subset-ness.
-        return _score_buckets_pairs_arrow(a_side, b_side, threshold).dropDuplicates(
-            ["id_a", "id_b"]
-        )
-    return (
-        _pin_bucket_partitions(a_side)
-        .join(_pin_bucket_partitions(b_side), "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_from_norms("va", "vb", "na", "nb"))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _threshold_pairs(bucketed, id_col, vec_col, a_side, b_side, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1169,10 +1133,12 @@ def srp_near_duplicate_pairs(
 # ONE numpy matmul (Q x C^T), so the per-pair cost is a fused BLAS flop
 # instead of an interpreted expression tree (~10x at 64 dims).
 #
-# Used by the APPROXIMATE paths only (scorer="arrow"): numpy's pairwise
-# summation differs from the Catalyst fold by final-ulp rounding, so
-# hash-checked exact paths (brute_force_topk, near_duplicate_pairs,
-# embedding_ann_recall's subset certificate) stay on the Catalyst scorer.
+# numpy's pairwise summation differs from the Catalyst fold by final-ulp
+# rounding. The top-k scorer serves the approximate top-k paths
+# (scorer="arrow"); hash-checked top-k (brute_force_topk's default) stays
+# on the fold. The pair scorer is the CANDIDATE stage of every threshold
+# pair miner: _threshold_pairs rescores its survivors with the fold, so
+# the fold alone decides the threshold boundary.
 #
 # Scale shape: Python-call count == bucket count (bounded work per call:
 # max_bucket_size caps the candidate matrix, bucket_size x (nbits+1)
@@ -1236,28 +1202,32 @@ def _score_buckets_topk_arrow(q: DataFrame, cand: DataFrame, k: int) -> DataFram
 
 
 def _score_buckets_pairs_arrow(
-    a_side: DataFrame, b_side: DataFrame, threshold: float
+    a_side: DataFrame, b_side: DataFrame, cut: float
 ) -> DataFrame:
-    """Per-bucket thresholded cosine pairs via one matmul per bucket.
-    Emits (id_a, id_b, cosine) with id_a < id_b and cosine >= threshold;
-    callers dedup across buckets."""
+    """Per-bucket candidate pairs via one matmul per bucket: emits
+    (id_a, id_b) with id_a < id_b and a score NOT below ``cut`` — NaN
+    scores included, since Spark orders NaN above every value and the
+    exact rescore must see those pairs. Callers dedup across buckets.
+
+    A null vector, or a pair of vectors of different lengths, has a null
+    cosine in the fold and is never a pair, so each vector length the
+    two sides share is scored on its own."""
     import numpy as np
     import pandas as pd
 
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        A = np.stack(left["va"].to_numpy()).astype(np.float64)
-        B = np.stack(right["vb"].to_numpy()).astype(np.float64)
-        ida = left["id_a"].to_numpy()
-        idb = right["id_b"].to_numpy()
-        with np.errstate(divide="ignore", invalid="ignore"):
-            S = (A @ B.T) / np.outer(left["na"].to_numpy(), right["nb"].to_numpy())
-        ii, jj = np.nonzero((S >= threshold) & (ida[:, None] < idb[None, :]))
-        return pd.DataFrame(
-            {"id_a": ida[ii], "id_b": idb[jj], "cosine": S[ii, jj]}
-        )
+        la, lb = left["va"].str.len(), right["vb"].str.len()
+        out = []
+        for dim in set(la.dropna()) & set(lb.dropna()):
+            lt, rt = left[la == dim], right[lb == dim]
+            A = np.stack(lt["va"].to_numpy()).astype(np.float64)
+            B = np.stack(rt["vb"].to_numpy()).astype(np.float64)
+            ida, idb = lt["id_a"].to_numpy(), rt["id_b"].to_numpy()
+            with np.errstate(divide="ignore", invalid="ignore"):
+                S = (A @ B.T) / np.outer(lt["na"].to_numpy(), rt["nb"].to_numpy())
+            ii, jj = np.nonzero(~(S < cut) & (ida[:, None] < idb[None, :]))
+            out.append(pd.DataFrame({"id_a": ida[ii], "id_b": idb[jj]}))
+        return pd.concat(out) if out else pd.DataFrame({"id_a": [], "id_b": []})
 
     b_r = b_side.withColumnRenamed("bucket", "bucket_r")
     return (
@@ -1266,7 +1236,7 @@ def _score_buckets_pairs_arrow(
         .cogroup(b_r.repartition(
             a_side.sparkSession.sparkContext.defaultParallelism, F.col("bucket_r")
         ).groupBy("bucket_r"))
-        .applyInPandas(score, "id_a long, id_b long, cosine double")
+        .applyInPandas(score, "id_a long, id_b long")
     )
 
 
@@ -1514,7 +1484,6 @@ def semdedup_pairs(
     n_clusters: int | None = None,
     n_probe: int = 1,
     iters: int = 2,
-    scorer: str = "arrow",
 ) -> DataFrame:
     """Semantic-duplicate pairs the SemDeDup way (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embeddings with the deterministic
@@ -1522,28 +1491,22 @@ def semdedup_pairs(
     then score EXACT cosine only within each cluster and keep pairs at or
     above ``threshold``. Output contract matches ``near_duplicate_pairs``
     (``id_a < id_b, cosine``); the approximation is only which pairs are
-    ever *scored* (cross-cluster pairs are not), so with the Catalyst
-    scorer the result is a strict SUBSET of the exact pair set.
+    ever *scored* (cross-cluster pairs are not), and ``_threshold_pairs``
+    decides the boundary with the exact fold, so the result is a strict
+    SUBSET of the exact pair set with bit-equal cosines.
 
     Scale shape: cost is sum over clusters of ``|c|^2`` — with
     ``n_clusters ~ sqrt(N)`` that is ``O(N^1.5)`` worst case and ~linear
     on real clustered data — never the ``N^2`` all-pairs scan. Vectors
     cross the shuffle once per cluster membership (``n_probe`` times with
-    multi-assignment); each cluster is scored as one numpy matmul via the
-    shared cogrouped Arrow scorer.
+    multi-assignment); each cluster's candidates come from one numpy
+    matmul over the normalized vectors.
 
     ``n_probe > 1`` assigns each vector to its ``n_probe`` best cells and
     unions the within-cell pairs — the recall knob for near-threshold
     pairs that straddle a k-means boundary (the paper's single-assignment
     form is ``n_probe=1``). Pairs found in several shared cells are
     deduplicated.
-
-    ``scorer="catalyst"`` re-derives each side from the RAW vector column
-    with the exact ``cosine_from_norms`` expression ``near_duplicate_pairs``
-    uses — bit-identical scores, so certificate callers can assert strict
-    subset-ness at the threshold boundary. The default Arrow scorer
-    computes the same cosines as one matmul per cluster (final-ulp
-    divergence only) for the production path.
     """
     if n_clusters is None:
         n_clusters = max(2, math.isqrt(df.count()))
@@ -1561,65 +1524,15 @@ def semdedup_pairs(
             ).alias("bucket"),
         )
 
-    if scorer == "arrow":
-        a_side = membership.select(
-            F.col(id_col).alias("id_a"),
-            F.col("vn").alias("va"),
-            F.lit(1.0).alias("na"),
-            "bucket",
-        )
-        b_side = membership.select(
-            F.col(id_col).alias("id_b"),
-            F.col("vn").alias("vb"),
-            F.lit(1.0).alias("nb"),
-            "bucket",
-        )
-        pairs = _score_buckets_pairs_arrow(a_side, b_side, threshold)
-        return pairs.dropDuplicates(["id_a", "id_b"]) if n_probe > 1 else pairs
-
-    # Catalyst scorer, two stages (same pattern as
-    # near_duplicate_pairs_fast, guide §4.2): the quadratic within-cell
-    # scoring runs as one numpy matmul per cell over the already-held
-    # normalized vectors at (threshold - 1e-6) — candidates only; the
-    # surviving ~k pairs then re-derive ``cosine`` from the RAW vectors
-    # with the exact near_duplicate_pairs expression and decide the
-    # threshold boundary there. numpy and the fold differ by summation
-    # order alone (~1e-14 for 64-dim), so no true pair can miss the
-    # candidate cut, and the emitted set and scores stay bit-identical
-    # to the earlier interpreted per-pair form — the certificate's
-    # strict subset claim at the boundary is unweakened. (That earlier
-    # form evaluated the fold per within-cell pair: the dominant cost
-    # of the semdedup_recall cell.)
-    cand = (
-        _score_buckets_pairs_arrow(
-            membership.select(
-                F.col(id_col).alias("id_a"), F.col("vn").alias("va"),
-                F.lit(1.0).alias("na"), "bucket",
-            ),
-            membership.select(
-                F.col(id_col).alias("id_b"), F.col("vn").alias("vb"),
-                F.lit(1.0).alias("nb"), "bucket",
-            ),
-            threshold - 1e-6,
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    a_side = membership.select(
+        F.col(id_col).alias("id_a"), F.col("vn").alias("va"),
+        F.lit(1.0).alias("na"), "bucket",
     )
-    a = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        l2_norm(vec_col).alias("na"),
+    b_side = membership.select(
+        F.col(id_col).alias("id_b"), F.col("vn").alias("vb"),
+        F.lit(1.0).alias("nb"), "bucket",
     )
-    b = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        l2_norm(vec_col).alias("nb"),
-    )
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("cosine", cosine_from_norms("va", "vb", "na", "nb"))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _threshold_pairs(df, id_col, vec_col, a_side, b_side, threshold)
 
 
 def semdedup_prune(
@@ -1631,7 +1544,6 @@ def semdedup_prune(
     n_clusters: int | None = None,
     n_probe: int = 1,
     iters: int = 2,
-    scorer: str = "arrow",
 ) -> DataFrame:
     """SemDeDup survivors: drop every document that has a semantic
     duplicate (same-cluster cosine >= ``threshold``) with a SMALLER id.
@@ -1651,7 +1563,6 @@ def semdedup_prune(
         n_clusters=n_clusters,
         n_probe=n_probe,
         iters=iters,
-        scorer=scorer,
     )
     pruned = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(pruned, id_col, "left_anti")

@@ -530,7 +530,9 @@ EXACT_NEAR_DUP_CAP = 50_000
 )
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the exact all-pairs baseline
-    (guarded against corpus-scale inputs; the scale path is embedding_ann).
+    (guarded against corpus-scale inputs; the scale path is embedding_ann):
+    numpy matmul candidates per shard, rescored and thresholded with the
+    Catalyst fold the oracle's SQL cosine matches bit for bit.
     Threshold 0.42 sits in the top ~0.03% of the synthetic corpus's cosine
     distribution (max ~0.51), so the result is small but non-empty at every
     SF — a discriminating check. Input is bounded at EXACT_NEAR_DUP_CAP on
@@ -544,19 +546,19 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("embedding_near_dup_ann")  # approximate candidates -> rows-only check
 def embedding_near_dup_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scale path for embedding_near_dup: SRP-bucketed candidate pairs
-    (8 OR-amplified tables, multi-probe) scored per-bucket as one numpy
-    matmul (Arrow scorer) and thresholded — never O(N^2), and no
-    interpreted per-pair expression either. The 88 sign bits themselves
-    are also one matmul per Arrow batch (hasher="arrow"): the interpreted
-    HOF fold form was the dominant — and JIT-bimodal — stage of the
-    round-8 sf10 cell. Recall vs the exact baseline and hasher agreement
-    are asserted in tests/test_llm_ops.py; the recall bound is also
-    driver-gated via embedding_ann_recall below (same arrow hasher,
-    Catalyst scorer for exact thresholding)."""
+    (8 OR-amplified tables, multi-probe) found per bucket by one numpy
+    matmul, then rescored and thresholded with the exact fold — never
+    O(N^2), and the interpreted expression runs per candidate, not per
+    bucket pair. The 88 sign bits themselves are also one matmul per
+    Arrow batch (hasher="arrow"): the interpreted HOF fold form was the
+    dominant — and JIT-bimodal — stage of the round-8 sf10 cell. Recall
+    vs the exact baseline and hasher agreement are asserted in
+    tests/test_llm_ops.py; the recall bound is also hash-checked via
+    embedding_ann_recall below (same configuration)."""
     emb = t(spark, sf_dir, "embeddings")
     return srp_near_duplicate_pairs(
         emb, "vec_id", "embedding", dim=EMBEDDING_DIM, threshold=0.42,
-        n_tables=8, scorer="arrow", hasher="arrow",
+        n_tables=8, hasher="arrow",
     )
 
 
@@ -589,31 +591,18 @@ def embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     never trusts subset-ness) cover >= ANN_RECALL_FLOOR of it. A recall
     regression flips the boolean and the driver's hash check fails —
     converting the ANN path's evidence from rows-only to value-checked."""
-    from bigdatapipelne_spark.operators.similarity import (
-        near_duplicate_pairs_fast,
-    )
-
     emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < EXACT_NEAR_DUP_CAP)
     # Checkpoint the exact pair set: it feeds both the semi-join and the
-    # n_exact_pairs count, and without the barrier the O(N^2) Catalyst
+    # n_exact_pairs count, and without the barrier the O(N^2) candidate
     # scoring subtree is planned (and executed) twice — guide §7.2.
-    # The _fast form is bit-identical to near_duplicate_pairs (arrow
-    # candidate matmul + exact Catalyst rescore at the boundary) without
-    # the interpreted per-pair fold — guide §4.2.
     exact = eager_checkpoint(
-        near_duplicate_pairs_fast(emb, "vec_id", "embedding", threshold=0.42)
+        near_duplicate_pairs(emb, "vec_id", "embedding", threshold=0.42)
     )
-    # hasher AND scorer match the production path (embedding_near_dup_ann)
-    # so the certificate bounds the candidates that path actually
-    # generates. The arrow scorer is safe HERE because the claim never
-    # trusts subset-ness: candidates are semi-joined against the exact
-    # set (a boundary-ulp extra is dropped by the join; a boundary-ulp
-    # miss costs 1/n of recall against a floor with 10% margin), and the
-    # emitted row is the floor boolean. semdedup_recall's subset_ok twin
-    # keeps the Catalyst boundary decision — that one IS a subset claim.
+    # The production configuration (embedding_near_dup_ann), so the
+    # certificate bounds the candidates that path actually generates.
     ann = srp_near_duplicate_pairs(
         emb, "vec_id", "embedding", dim=EMBEDDING_DIM, threshold=0.42,
-        n_tables=8, hasher="arrow", scorer="arrow",
+        n_tables=8, hasher="arrow",
     )
     found = ann.join(exact, ["id_a", "id_b"], "left_semi")
     ne = exact.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
@@ -659,30 +648,26 @@ def semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py semdedup_pairs — cluster-scoped exact cosine,
     Abbas et al. 2023): the oracle computes the exact near-dup pair count
     in SQL; the Spark side emits subset_ok = TRUE only if EVERY SemDeDup
-    pair is in the exact pair set (the Catalyst scorer makes the scores
-    bit-identical to near_duplicate_pairs, so this is a strict claim at
-    the threshold boundary) and recall_ge_floor = TRUE only if the
-    cluster-scoped pairs cover >= SEMDEDUP_RECALL_FLOOR of it. A recall
-    or containment regression flips a boolean and the driver's hash check
-    fails — the same certificate pattern as embedding_ann_recall."""
-    from bigdatapipelne_spark.operators.similarity import (
-        near_duplicate_pairs_fast as _exact_pairs,
-        semdedup_pairs,
-    )
+    pair is in the exact pair set (both miners decide the threshold with
+    the same exact fold, so this is a strict claim at the boundary) and
+    recall_ge_floor = TRUE only if the cluster-scoped pairs cover
+    >= SEMDEDUP_RECALL_FLOOR of it. A recall or containment regression
+    flips a boolean and the oracle hash check fails — the same
+    certificate pattern as embedding_ann_recall."""
+    from bigdatapipelne_spark.operators.similarity import semdedup_pairs
 
     emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < EXACT_NEAR_DUP_CAP)
     emb = _widen_narrow_input(emb)
     # Both pair sets are consumed by multiple branches (found/extra/counts);
     # checkpoint each once or the O(N^2) exact scoring runs 3x and the
-    # cluster-scoped scoring 2x inside one plan (guide §7.2 — the before
-    # plan held 10 CartesianProduct nodes; after: 1 exact + 1 sem pass).
+    # cluster-scoped scoring 2x inside one plan (guide §7.2).
     exact = eager_checkpoint(
-        _exact_pairs(emb, "vec_id", "embedding", threshold=0.42)
+        near_duplicate_pairs(emb, "vec_id", "embedding", threshold=0.42)
     )
     sem = eager_checkpoint(
         semdedup_pairs(
             emb, "vec_id", "embedding",
-            threshold=0.42, n_clusters=8, n_probe=3, scorer="catalyst",
+            threshold=0.42, n_clusters=8, n_probe=3,
         )
     )
     found = sem.join(exact, ["id_a", "id_b"], "left_semi")
@@ -711,9 +696,9 @@ def semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup survivors over the full embeddings table — the production
     semantic-dedup path (operators/similarity.py semdedup_prune):
-    deterministic k-means cells (~sqrt(N) clusters), within-cell exact
-    cosine via one Arrow matmul per cell, keep-lowest-id per duplicate
-    relation. Cost is sum of cell^2, never N^2; recall and strict
+    deterministic k-means cells (~sqrt(N) clusters), within-cell
+    candidates via one Arrow matmul per cell rescored with the exact
+    fold, keep-lowest-id per duplicate relation. Cost is sum of cell^2, never N^2; recall and strict
     subset-ness vs the exact pair set are driver-gated via
     semdedup_recall."""
     from bigdatapipelne_spark.operators.similarity import semdedup_prune

@@ -9,7 +9,8 @@ reproduces exactly that contract over the engine's bucket-partitioned
 parquet store (operators/serving.py). A GET with ``Key`` is an Arrow read
 of the one bucket directory the key hashes into (``bucket_of_value``),
 filtered on the key and rendered as Spark's ``toJSON`` would; it launches
-no Spark job. Puts and deletes take the store schema from a parquet footer
+no Spark job. A PUT starts from the same read, in the stored types. Puts
+and deletes take the store schema from a parquet footer
 (``store_schema``) and rewrite only the buckets their keys hash into, so
 every keyed verb is O(batch), never O(table). A GET without ``Key`` is a
 Spark full scan.
@@ -155,6 +156,23 @@ def _json_value(v, t: T.DataType, tz: datetime.tzinfo):
     raise TypeError(f"no JSON rendering for {t.simpleString()}")
 
 
+def _row_value(v, t: T.DataType):
+    """One Arrow value in the form ``createDataFrame`` takes for ``t``:
+    Arrow reads Spark's INT96 timestamps without a zone (they are UTC
+    instants) and maps as key-value pairs."""
+    if v is None:
+        return None
+    if isinstance(t, T.TimestampType):
+        return v if v.tzinfo else v.replace(tzinfo=datetime.timezone.utc)
+    if isinstance(t, T.ArrayType):
+        return [_row_value(e, t.elementType) for e in v]
+    if isinstance(t, T.StructType):
+        return {f.name: _row_value(v[f.name], f.dataType) for f in t.fields}
+    if isinstance(t, T.MapType):
+        return {k: _row_value(x, t.valueType) for k, x in v}
+    return v
+
+
 def _reply(items: list) -> dict:
     return {"Items": items, "Count": len(items)}
 
@@ -194,28 +212,36 @@ class ServingApi:
         # toJSON handles timestamps/decimals; bucket column stays internal
         return _reply([json.loads(s) for s in df.toJSON().collect()])
 
-    def _query(self, spec: TableSpec, key_value) -> dict:
-        """GET with Key — DynamoDB Query parity (function.py:38-46): the
-        key is cast to the key column's type as Spark's ``CAST`` would,
-        hashed to its bucket in Python, and only that bucket directory is
-        read, with Arrow and a key-equality filter. No Spark job runs."""
+    def _read_key(self, spec: TableSpec, key_value) -> tuple[T.StructType | None, list]:
+        """The store schema and the stored rows of one key, as Arrow reads
+        them: the key is cast to the key column's type as Spark's ``CAST``
+        would, hashed to its bucket in Python, and only that bucket
+        directory is read, with a key-equality filter. No Spark job runs."""
         schema = store_schema(spec.path)
         if schema is None:
-            return _reply([])
+            return None, []
         key_type = schema[spec.key_col].dataType.simpleString()
-        conf = self.spark.conf
-        key = _cast_key(key_value, key_type, conf.get("spark.sql.ansi.enabled") == "true")
+        ansi = self.spark.conf.get("spark.sql.ansi.enabled") == "true"
+        key = _cast_key(key_value, key_type, ansi)
         if key is None:
-            return _reply([])
+            return schema, []
         bucket = os.path.join(
             spec.path, f"{BUCKET_COL}={bucket_of_value(key, key_type, spec.num_buckets)}"
         )
         if not os.path.isdir(bucket):
-            return _reply([])
+            return schema, []
         rows = ds.dataset(bucket, format=_PARQUET).to_table(
             filter=pc.field(spec.key_col) == key
         ).to_pylist()
-        tz = _zone(conf.get("spark.sql.session.timeZone"))
+        return schema, rows
+
+    def _query(self, spec: TableSpec, key_value) -> dict:
+        """GET with Key — DynamoDB Query parity (function.py:38-46): the
+        key's rows rendered as Spark's ``toJSON`` would."""
+        schema, rows = self._read_key(spec, key_value)
+        if not rows:
+            return _reply([])
+        tz = _zone(self.spark.conf.get("spark.sql.session.timeZone"))
         return _reply([_json_value(r, schema, tz) for r in rows])
 
     def _put(self, spec: TableSpec, item: dict) -> dict:
@@ -235,12 +261,13 @@ class ServingApi:
 
     def _update(self, spec: TableSpec, key: dict, updates: dict) -> dict:
         """PUT — update_item parity: merge ``updates`` into the existing
-        item's attributes (missing attributes survive)."""
+        item's attributes (missing attributes survive). The item is read
+        in its stored types, never from its JSON rendering."""
         [(kcol, kval)] = key.items()
         if kcol != spec.key_col:
             raise ValueError(f"Key must be {spec.key_col!r}, got {kcol!r}")
-        current = self._query(spec, kval)["Items"]
-        base = current[0] if current else {}
+        schema, current = self._read_key(spec, kval)
+        base = _row_value(current[0], schema) if current else {}
         base.update(updates)
         base[spec.key_col] = kval
         return self._put(spec, base)

@@ -105,35 +105,88 @@ def test_near_dup_guard_refuses_large_input(spark, monkeypatch):
         near_duplicate_pairs(emb, "vec_id", "embedding", 0.5)
 
 
-def test_near_duplicate_pairs_fast_bit_parity(spark):
-    """The two-stage certificate form (arrow candidate matmul + exact
-    Catalyst rescore) emits the SAME pair set with the SAME cosine BITS
-    as the single-expression baseline — the property that lets the
-    hash-checked recall certificates use it. Checked at two thresholds
-    (the gate's 0.42 and a looser 0.3 that admits ~10x more pairs)."""
-    from bigdatapipelne_spark.operators.similarity import (
-        near_duplicate_pairs_fast,
+def _fold_pairs(df, id_col, vec_col, threshold):
+    """Reference: every pair scored by the single Catalyst fold
+    expression over a cross join, then thresholded."""
+    from bigdatapipelne_spark.functions.vectors import cosine_from_norms, l2_norm
+
+    a = df.select(
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), l2_norm(vec_col).alias("na")
+    )
+    b = df.select(
+        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), l2_norm(vec_col).alias("nb")
+    )
+    return (
+        a.crossJoin(b)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine", cosine_from_norms("va", "vb", "na", "nb"))
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
     )
 
+
+def _pair_bits(frame):
+    """{(id_a, id_b): cosine bits}, or the class of the exception the
+    collect raised."""
+    import struct
+
+    try:
+        return {(r.id_a, r.id_b): struct.pack("<d", r.cosine) for r in frame.collect()}
+    except Exception as e:  # noqa: BLE001 — the class itself is compared
+        return type(e)
+
+
+@pytest.fixture(params=["true", "false"], ids=["ansi", "no_ansi"])
+def ansi(spark, request):
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    yield request.param
+    spark.conf.set("spark.sql.ansi.enabled", before)
+
+
+def test_near_duplicate_pairs_matches_the_fold_bits(spark, ansi):
+    """The two-stage path (numpy candidates, Catalyst rescore) emits the
+    SAME pair set with the SAME cosine BITS as the single-expression fold,
+    at the gate's 0.42 and at a looser 0.3 that admits ~10x more pairs."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     for thr in (0.42, 0.3):
-        base = {
-            (r.id_a, r.id_b): r.cosine
-            for r in near_duplicate_pairs(
-                emb, "vec_id", "embedding", thr
-            ).collect()
-        }
-        fast = {
-            (r.id_a, r.id_b): r.cosine
-            for r in near_duplicate_pairs_fast(
-                emb, "vec_id", "embedding", threshold=thr
-            ).collect()
-        }
-        assert base.keys() == fast.keys()
-        assert len(base) > 0
-        for k, v in base.items():
-            # bit equality, not approx: the rescore must be the same fold
-            assert v == fast[k] and str(v) == str(fast[k]), (k, v, fast[k])
+        want = _pair_bits(_fold_pairs(emb, "vec_id", "embedding", thr))
+        assert isinstance(want, dict) and len(want) > 0
+        assert _pair_bits(near_duplicate_pairs(emb, "vec_id", "embedding", thr)) == want
+
+
+_GOOD_VECS = [
+    (1, [1.0, 0.0, 0.0, 0.0]),
+    (2, [0.9, 0.1, 0.0, 0.0]),
+    (3, [0.0, 1.0, 0.0, 0.0]),
+    (4, [0.5, 0.5, 0.1, 0.0]),
+]
+_BAD_VECS = {
+    "nan": (5, [float("nan"), 1.0, 0.0, 0.0]),
+    "zero": (6, [0.0, 0.0, 0.0, 0.0]),
+    "null": (7, None),
+    "short": (8, [1.0, 0.0]),
+    "short_twin": (9, [1.0, 0.1]),
+}
+
+
+@pytest.mark.parametrize("bad", [("nan",), ("zero",), ("nan", "null", "short", "short_twin")],
+                         ids=["nan", "zero", "nan_null_short"])
+def test_near_duplicate_pairs_nan_and_zero_norm_match_the_fold(spark, ansi, bad):
+    """A NaN element gives NaN cosines, which Spark orders above every
+    threshold, so the fold emits those pairs; a zero norm divides by zero,
+    which raises under ANSI and is null otherwise; a null vector or a pair
+    of different lengths has a null cosine. near_duplicate_pairs must give
+    the fold's pairs and bits, or raise the same exception class."""
+    rows = _GOOD_VECS + [_BAD_VECS[b] for b in bad]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    want = _pair_bits(_fold_pairs(df, "vec_id", "embedding", 0.5))
+    assert _pair_bits(near_duplicate_pairs(df, "vec_id", "embedding", 0.5)) == want
+    if bad == ("zero",):
+        assert isinstance(want, dict) == (ansi == "false")
+    else:
+        assert sum(5 in pair for pair in want) == len(_GOOD_VECS)  # NaN pairs
+        assert ("short" not in bad) or (8, 9) in want
 
 
 def test_certificate_queries_release_checkpoint_blocks(spark):
@@ -182,15 +235,6 @@ def test_certificate_queries_release_checkpoint_blocks(spark):
             f"{name} leaked {leaked} localCheckpoint RDD(s) past its "
             f"return (allowed {allow}) — release_checkpoint its "
             "checkpointed intermediates"
-        )
-
-
-def test_near_duplicate_pairs_fast_guard(spark, monkeypatch):
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    monkeypatch.setattr(similarity, "NEAR_DUP_MAX_ROWS", 10)
-    with pytest.raises(ValueError, match="O\\(N\\^2\\)"):
-        similarity.near_duplicate_pairs_fast(
-            emb, "vec_id", "embedding", threshold=0.5
         )
 
 
@@ -484,26 +528,25 @@ def test_srp_near_dup_pairs_recall_and_exactness(spark):
     from bigdatapipelne_spark.operators.similarity import srp_near_duplicate_pairs
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    exact = {(r.id_a, r.id_b): r.cosine for r in
-             near_duplicate_pairs(emb, "vec_id", "embedding", 0.42).collect()}
-    approx = {(r.id_a, r.id_b): r.cosine for r in
-              srp_near_duplicate_pairs(
-                  emb, "vec_id", "embedding", dim=64, threshold=0.42
-              ).collect()}
-    # Every surfaced pair is a TRUE pair with the exact score (candidates
-    # are approximate, scoring is not).
-    for pair, cos in approx.items():
-        assert pair in exact and cos == exact[pair]
-    # Recall floor at a deliberately hard threshold (0.42 ~ 65 deg; real
-    # near-dup thresholds ~0.9 sit far inside the bucket radius).
-    if exact:
-        assert len(approx) / len(exact) >= 0.4
-    # Determinism across runs.
-    again = {(r.id_a, r.id_b): r.cosine for r in
-             srp_near_duplicate_pairs(
-                 emb, "vec_id", "embedding", dim=64, threshold=0.42
-             ).collect()}
-    assert approx == again
+    exact = _pair_bits(near_duplicate_pairs(emb, "vec_id", "embedding", 0.42))
+    assert len(exact) > 0
+    # The default single table, and the registered configuration of
+    # embedding_near_dup_ann and embedding_ann_recall.
+    for kw in ({}, {"n_tables": 8, "hasher": "arrow"}):
+        approx = _pair_bits(srp_near_duplicate_pairs(
+            emb, "vec_id", "embedding", dim=64, threshold=0.42, **kw
+        ))
+        # Every surfaced pair is a TRUE pair with the exact cosine bits
+        # (candidates are approximate, scoring is not).
+        for pair, cos in approx.items():
+            assert pair in exact and cos == exact[pair], kw
+        # Recall floor at a deliberately hard threshold (0.42 ~ 65 deg;
+        # real near-dup thresholds ~0.9 sit far inside the bucket radius).
+        assert len(approx) / len(exact) >= 0.4, kw
+        # Determinism across runs.
+        assert approx == _pair_bits(srp_near_duplicate_pairs(
+            emb, "vec_id", "embedding", dim=64, threshold=0.42, **kw
+        )), kw
 
 
 def test_chunking_udtf_matches_expression(spark):
@@ -1708,24 +1751,21 @@ def test_ivf_insert_bounded_maintenance_and_retrain_policy(spark, tmp_path):
 
 
 def test_semdedup_pairs_subset_and_recall(spark):
-    """Catalyst-scored SemDeDup pairs are a strict subset of the exact
-    pair set (bit-identical scoring expression) and cover the certificate
-    floor at the gate parameters."""
+    """SemDeDup pairs are a strict subset of the exact pair set with
+    bit-equal cosines (both rescore with the same fold) and cover the
+    certificate floor at the gate parameters."""
     from bigdatapipelne_spark.operators.similarity import semdedup_pairs
     from bigdatapipelne_spark.queries_llm import SEMDEDUP_RECALL_FLOOR
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    exact = near_duplicate_pairs(emb, "vec_id", "embedding", threshold=0.42)
-    sem = semdedup_pairs(
-        emb, "vec_id", "embedding",
-        threshold=0.42, n_clusters=8, n_probe=3, scorer="catalyst",
-    )
-    n_exact = exact.count()
-    n_extra = sem.join(exact, ["id_a", "id_b"], "left_anti").count()
-    n_found = sem.join(exact, ["id_a", "id_b"], "left_semi").count()
-    assert n_extra == 0, "SemDeDup emitted a pair outside the exact set"
-    assert n_exact > 0
-    assert n_found >= SEMDEDUP_RECALL_FLOOR * n_exact
+    exact = _pair_bits(near_duplicate_pairs(emb, "vec_id", "embedding", threshold=0.42))
+    sem = _pair_bits(semdedup_pairs(
+        emb, "vec_id", "embedding", threshold=0.42, n_clusters=8, n_probe=3,
+    ))
+    for pair, cos in sem.items():
+        assert pair in exact and cos == exact[pair], "SemDeDup pair outside the exact set"
+    assert len(exact) > 0
+    assert len(sem) >= SEMDEDUP_RECALL_FLOOR * len(exact)
 
 
 def test_semdedup_probe_monotone(spark):
@@ -1736,30 +1776,14 @@ def test_semdedup_probe_monotone(spark):
     emb = load_table(spark, SF_SMALL, "embeddings")
     p1 = semdedup_pairs(
         emb, "vec_id", "embedding",
-        threshold=0.42, n_clusters=8, n_probe=1, scorer="catalyst",
+        threshold=0.42, n_clusters=8, n_probe=1,
     )
     p3 = semdedup_pairs(
         emb, "vec_id", "embedding",
-        threshold=0.42, n_clusters=8, n_probe=3, scorer="catalyst",
+        threshold=0.42, n_clusters=8, n_probe=3,
     )
     missing = p1.select("id_a", "id_b").exceptAll(p3.select("id_a", "id_b"))
     assert missing.count() == 0
-
-
-def test_semdedup_arrow_matches_catalyst_pairs(spark):
-    """The Arrow per-cluster matmul finds the same pairs as the Catalyst
-    expression; any symmetric difference must sit at the threshold
-    boundary (final-ulp divergence is the documented contract)."""
-    from bigdatapipelne_spark.operators.similarity import semdedup_pairs
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    kw = dict(threshold=0.42, n_clusters=8, n_probe=2)
-    cat = semdedup_pairs(emb, "vec_id", "embedding", scorer="catalyst", **kw)
-    arr = semdedup_pairs(emb, "vec_id", "embedding", scorer="arrow", **kw)
-    only_cat = cat.join(arr, ["id_a", "id_b"], "left_anti").collect()
-    only_arr = arr.join(cat, ["id_a", "id_b"], "left_anti").collect()
-    for r in only_cat + only_arr:
-        assert abs(r.cosine - 0.42) < 1e-9, r
 
 
 def test_semdedup_prune_keeps_min_id(spark):
@@ -1777,7 +1801,7 @@ def test_semdedup_prune_keeps_min_id(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = semdedup_prune(
         df, "vec_id", "embedding",
-        threshold=0.99, n_clusters=2, n_probe=2, scorer="catalyst",
+        threshold=0.99, n_clusters=2, n_probe=2,
     )
     kept = sorted(r.vec_id for r in out.collect())
     assert kept == [1, 4, 5]

@@ -58,17 +58,16 @@ def test_aggregates_are_partial_final(spark):
 
 
 def test_no_cartesian_or_rowwise_python_on_registered_paths(spark):
-    # The exact all-pairs baselines are the *documented* exceptions; every
+    # The exact top-k baselines are the *documented* exceptions; every
     # other registered query must be free of cartesian products and
-    # row-at-a-time Python.
+    # row-at-a-time Python. The exact near-dup pair miner scores shards
+    # through an equi-keyed cogroup, so embedding_near_dup is audited.
     # q22's scalar average rides in as a 1-row broadcast: the nested-loop
     # join is degenerate (build side = one row) and correct at any scale.
     # tfidf_top_terms broadcasts the 1-row corpus count N the same way.
-    # embedding_ann_recall embeds the exact baseline (its whole point is
-    # measuring the SRP path against it) plus a 1-row x 1-row scalar join.
+    # embedding_ann_recall joins its 1-row pair counts the same way.
     # q11's global total is a 1-row broadcast like q22's scalar average.
     allowed_nested_loop = {
-        "embedding_near_dup",
         "embedding_ann_recall",
         "ann_topk_recall",   # capped exact top-k twin inside the certificate
         "ivf_topk_recall",   # capped exact top-k twin inside the certificate
@@ -90,8 +89,7 @@ def test_no_cartesian_or_rowwise_python_on_registered_paths(spark):
         "doc_unigram_logprob",  # 1-row corpus-token-total broadcast
         "value_drift_psi",   # 1-row global min/max stats broadcast
         "dsir_selected",     # two 1-row smoothing-total broadcasts
-        # 1-row x 1-row certificate-count joins (embeds the capped exact
-        # baseline like embedding_ann_recall)
+        # 1-row x 1-row certificate-count joins, like embedding_ann_recall
         "semdedup_recall",
     }
     # Queries that RUN a stream when their DataFrame is constructed are

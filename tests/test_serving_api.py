@@ -232,6 +232,47 @@ def test_get_matches_the_spark_rendering(typed_stores, zone, table, present, abs
     assert all(replies[key] == ("200", []) for key in absent)
 
 
+def test_put_on_a_typed_store_changes_only_its_attribute(spark, tmp_path):
+    """A PUT starts from the item as stored, not from its JSON rendering:
+    setting one attribute returns 200, and the GET rendering of every
+    other attribute (timestamps, dates, decimals, binary, NaN, arrays,
+    structs, maps, nulls) is unchanged, in any session time zone."""
+    from bigdatapipelne_spark.operators.serving import merge_into_store
+
+    path = str(tmp_path / "typed")
+    merge_into_store(spark, path, spark.sql(TYPED_ROWS), ["k"], num_buckets=4)
+    api = ServingApi(spark, {"t": TableSpec(path=path, key_col="k", num_buckets=4)})
+    keys = [f"k{i}" for i in range(12)]
+    zones = ["UTC", "America/Sao_Paulo"]
+
+    def render_all():
+        out = {}
+        for zone in zones:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            out[zone] = {key: _items(_get(api, "t", key)) for key in keys}
+        return out
+
+    try:
+        before = render_all()
+        updated = {"UTC": ["k1", "k5"], "America/Sao_Paulo": ["k6", "k7"]}
+        for zone, zone_keys in updated.items():
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            for key in zone_keys:
+                r = api.handler({"httpMethod": "PUT", "body": json.dumps(
+                    {"TableName": "t", "Key": {"k": key}, "Updates": {"n": zone}})})
+                assert r["statusCode"] == "200", r["body"]
+        after = render_all()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for zone in zones:
+        for key in keys:
+            [want] = before[zone][key]
+            for put_zone, zone_keys in updated.items():
+                if key in zone_keys:
+                    want = {**want, "n": put_zone}
+            assert after[zone][key] == [want], (zone, key)
+
+
 @pytest.mark.parametrize("ansi", ["true", "false"])
 def test_get_key_strings_cast_like_spark(api, ansi):
     """A bigint key arrives as a query-string; it gets the status code and
