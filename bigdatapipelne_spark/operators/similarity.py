@@ -1,38 +1,41 @@
 """Similarity search over embedding columns (north-star scope).
 
-Two tiers, same scoring expression (functions/vectors.cosine_similarity —
-pure Catalyst, bit-deterministic):
+Every operator here filters, then verifies: numpy finds the candidates
+(one matmul per bucket), and the Catalyst fold
+(functions/vectors.cosine_from_norms over l2_norm — bit-identical to the
+oracle's SQL cosine) scores the survivors and decides which are emitted.
 
-- ``brute_force_topk``: exact baseline. The *query* side is broadcast
-  (small by construction), the corpus streams through a map-side nested
-  loop — no corpus shuffle at all; the only shuffle is the final top-k per
-  query, which is k rows per query per partition after the window trims.
-- ``srp_bucket_ann``: scale path. Signed-random-projection LSH — every
-  vector gets an ``nbits``-bit bucket from deterministic md5-derived
-  hyperplanes; neighbor candidates share a bucket. Turns corpus-x-corpus
-  into an equi-join on bucket ids. 100 TB knobs:
+- The top-k operators share ``_topk_pairs``: per bucket, numpy forwards
+  each query's candidates down to its k-th score minus
+  ``CANDIDATE_MARGIN``, and ``_rescore_topk`` ranks the deduplicated
+  survivors by (fold score desc, neighbor_id). ``brute_force_topk``
+  (queries shard, the corpus replicates per shard) therefore emits the
+  all-pairs fold's top-k bit for bit; the approximate operators emit the
+  fold's top-k over the pairs their buckets share:
 
-  * ``nbits`` scales with corpus size (``nbits=None`` sizes buckets to
-    ``target_bucket_size`` from a count) — a fixed bit width would leave
-    bucket population quadratic in N.
-  * multi-probe (``probe_bits``): the query side also probes buckets at
-    Hamming distance 1, recovering most of the recall lost to unlucky
-    hyperplane splits without growing bucket size.
-  * ``max_bucket_size`` caps the candidate side per bucket
+  * ``srp_bucket_ann``: signed-random-projection LSH — every vector gets
+    an ``nbits``-bit bucket from deterministic md5-derived hyperplanes,
+    turning corpus-x-corpus into an equi-join on bucket ids.
+    ``nbits=None`` sizes buckets to ``target_bucket_size`` from a count
+    (a fixed bit width would leave bucket population quadratic in N);
+    ``probe_bits`` multi-probes the Hamming-1 buckets on the query side;
+    ``max_bucket_size`` caps the candidate side per bucket
     (deterministically, by md5(id) order) so one degenerate hot bucket
-    (e.g. the all-zeros region) cannot go quadratic; AQE's skew split
-    handles residual imbalance.
+    cannot go quadratic.
+  * ``ivf_topk`` / ``ivf_query_topk``: k-means cells of the L2-normalized
+    vectors; the fold there is ``dot`` of unit vectors.
+  * ``ivfpq_topk``: a product-quantized ADC shortlist inside the cells.
 
-  Approximate by design -> exercised as a rows-only query (no SQL oracle);
-  tests measure recall against ``brute_force_topk`` instead.
+  Approximate operators run as rows-only queries (no SQL oracle); the
+  recall certificates in queries_llm measure them against
+  ``brute_force_topk``.
 
-The threshold pair miners (``near_duplicate_pairs`` over shards,
-``srp_near_duplicate_pairs`` over SRP buckets, ``semdedup_pairs`` over
-k-means cells) share one exact path, ``_threshold_pairs``: one numpy
-matmul per bucket forwards the candidates at or just below the
-threshold, and the Catalyst fold rescores them and decides the boundary.
-Each miner therefore emits the all-pairs fold's pairs, or a subset of
-them, with the fold's cosine bits.
+- The threshold pair miners (``near_duplicate_pairs`` over shards,
+  ``srp_near_duplicate_pairs`` over SRP buckets, ``semdedup_pairs`` over
+  k-means cells) share ``_threshold_pairs``: numpy forwards the
+  candidates at or just below the threshold, and the fold rescores them
+  and decides the boundary. Each miner emits the all-pairs fold's pairs,
+  or a subset of them, with the fold's cosine bits.
 """
 
 from __future__ import annotations
@@ -44,15 +47,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from bigdatapipelne_spark.operators.checkpoint import eager_checkpoint
-
-# (math is used by pick_nbits and the IVF centroid renormalization.)
-
 from bigdatapipelne_spark.functions.vectors import (
     cosine_from_norms,
-    cosine_similarity,
     l2_norm,
+    l2_normalize,
 )
+from bigdatapipelne_spark.operators.checkpoint import eager_checkpoint
 
 
 def brute_force_topk(
@@ -61,89 +61,99 @@ def brute_force_topk(
     id_col: str,
     vec_col: str,
     k: int = 3,
-    scorer: str = "catalyst",
+    scorer: str | None = None,
     n_shards: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, score, rank<=k).
+    """Exact cosine top-k: (query_id, neighbor_id, score, rank<=k), equal
+    row for row and bit for bit to the all-pairs Catalyst fold ranked by
+    (score DESC, neighbor_id) — the unique tiebreaker keeps top-k
+    deterministic under ties on any cluster size. Self-matches (equal
+    ids) are excluded.
 
-    Ranking uses (score DESC, neighbor_id) — the unique tiebreaker keeps
-    top-k deterministic under ties on any cluster size.
-
-    ``scorer="catalyst"`` (default) scores with the bit-deterministic
-    Catalyst fold — keep it wherever scores feed a hash-checked oracle
-    (embedding_topk). The fold is INTERPRETED per pair, so exact twins
-    inside recall certificates use ``scorer="arrow"``: queries shard into
-    ``n_shards`` groups (default: the session's parallelism), candidates
-    replicate per shard, and each shard scores as one numpy matmul —
-    same pairs and ranks (ties within summation ulp may swap; callers of
-    the arrow path compare pair SETS with a floor, never score hashes)."""
-    if scorer == "arrow":
-        spark = queries.sparkSession
-        shards = int(n_shards or spark.sparkContext.defaultParallelism)
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            l2_norm(vec_col).alias("qn"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(shards)).alias("bucket"),
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-            l2_norm(vec_col).alias("cn"),
-            F.explode(F.array(*[F.lit(i) for i in range(shards)])).alias("bucket"),
-        )
-        # every query sees the FULL corpus in its one shard, so per-bucket
-        # top-k is already the global top-k — no dedup/re-rank join needed
-        scored = _score_buckets_topk_arrow(q, c, k)
-    else:
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            l2_norm(vec_col).alias("qn"),
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-            l2_norm(vec_col).alias("cn"),
-        )
-        scored = (
-            F.broadcast(q)
-            .crossJoin(c)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("score", cosine_from_norms("qv", "cv", "qn", "cn"))
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    Queries hash into ``n_shards`` buckets (default: the session's
+    parallelism) and the corpus replicates into every bucket, so each
+    query meets the full corpus in one numpy matmul; ``_topk_pairs``
+    rescores its few survivors with the fold."""
+    # scorer: ignored; kept only because perfbench/wl_corpus.py passes it
+    shards = int(n_shards or queries.sparkSession.sparkContext.defaultParallelism)
+    every_shard = F.explode(F.array(*[F.lit(i) for i in range(shards)]))
+    return _topk_pairs(
+        _side(queries, id_col, vec_col, "query_id", "q",
+              bucket=F.pmod(F.hash(F.col(id_col)), F.lit(shards))),
+        _side(corpus, id_col, vec_col, "neighbor_id", "c", bucket=every_shard),
+        _side(queries, id_col, vec_col, "query_id", "q"),
+        _side(corpus, id_col, vec_col, "neighbor_id", "c"),
+        k,
     )
 
 
-def _dedup_and_rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Global top-k per query over multi-bucket/multi-probe scored rows:
-    dedup the (query_id, neighbor_id) duplicates a pair picks up from
-    every shared bucket, then rank. ONE exchange instead of two — the
-    explicit hash repartition on query_id satisfies BOTH the dedup
-    aggregate (clustering by query_id co-locates every (query, neighbor)
-    group, a subset-key distribution) and the rank window's required
-    distribution, where the bare dedup + window form shuffled the full
-    scored set twice (once on the pair key, once on the query key).
-    Measured at the sf10 ANN cell (48M scored rows): 6.3s -> 3.9s warm,
-    plan-asserted single Exchange, result-identical.
+def _side(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    id_name: str,
+    p: str,
+    norm: F.Column | None = None,
+    bucket: F.Column | None = None,
+) -> DataFrame:
+    """(id_name, {p}v, {p}n[, bucket]): one side of a top-k pair stage,
+    normed by the fold's ``l2_norm`` unless ``norm`` is given."""
+    cols = [
+        F.col(id_col).alias(id_name),
+        F.col(vec_col).alias(f"{p}v"),
+        (l2_norm(vec_col) if norm is None else norm).alias(f"{p}n"),
+    ]
+    return df.select(*cols, *([] if bucket is None else [bucket.alias("bucket")]))
 
-    The dedup is a max(score) aggregate, not dropDuplicates: duplicates
-    of a pair score the SAME vectors, but dgemm evaluation order differs
-    across buckets, so copies can differ at the last ulp (~44/200k query
-    groups observed at sf10). dropDuplicates keeps an arbitrary survivor
-    — nondeterministic near the rank-k boundary; max() pins a canonical
-    one, so repeated runs emit the same set."""
-    par = scored.sparkSession.sparkContext.defaultParallelism
+
+def _topk_pairs(
+    q: DataFrame,
+    c: DataFrame,
+    q_vecs: DataFrame,
+    c_vecs: DataFrame,
+    k: int,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """The one exact path of the top-k operators, in two stages (filter,
+    then verify):
+
+    1. CANDIDATES: ``_score_buckets_topk_arrow`` scores each bucket the
+       sides ``q`` (query_id, qv, qn, bucket) and ``c`` (neighbor_id, cv,
+       cn, bucket) share as one numpy matmul and forwards each query's
+       candidates down to its k-th numpy score minus
+       ``CANDIDATE_MARGIN``, and every pair it cannot score finitely.
+    2. RESCORE: ``_rescore_topk`` scores the survivors with the fold over
+       ``q_vecs`` / ``c_vecs`` and ranks them.
+
+    A pair in a query's fold top-k is outranked by fewer than k pairs in
+    every bucket that holds it, and numpy differs from the fold by
+    ~dim*eps, far inside the margin, so stage 1 forwards it from each.
+    The output is the fold's top-k over the pairs the buckets share,
+    with the fold's bits; under ANSI a zero norm the fold would meet
+    raises DIVIDE_BY_ZERO as the fold does."""
+    return _rescore_topk(
+        _score_buckets_topk_arrow(q, c, k, exclude_self), q_vecs, c_vecs, k
+    )
+
+
+def _rescore_topk(
+    cand: DataFrame, q_vecs: DataFrame, c_vecs: DataFrame, k: int
+) -> DataFrame:
+    """Deduplicate the (query_id, neighbor_id) candidates a pair picks up
+    from every bucket it shares, join each side's vector and norm back,
+    score with ``cosine_from_norms`` and keep rank <= k by (score desc,
+    neighbor_id). ONE exchange when the vector sides broadcast: the hash
+    repartition on query_id satisfies the dedup aggregate (clustering by
+    query_id co-locates every (query, neighbor) group), the query-side
+    join and the rank window's distribution."""
+    par = cand.sparkSession.sparkContext.defaultParallelism
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
-        scored.repartition(par, "query_id")
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("score").alias("score"))
+        cand.repartition(par, "query_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
+        .join(q_vecs, "query_id")
+        .join(c_vecs, "neighbor_id")
+        .withColumn("score", cosine_from_norms("qv", "cv", "qn", "cn"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
@@ -248,18 +258,16 @@ def _threshold_pairs(
     )
 
 
-def _dot_lit(vec: F.Column, lit_arr: F.Column) -> F.Column:
-    """Dot product of a vector column with a literal array column."""
-    return F.aggregate(
-        F.zip_with(vec, lit_arr, lambda x, c: x * c),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _normalized(vec_col: str) -> F.Column:
-    n = l2_norm(vec_col)
-    return F.transform(F.col(vec_col), lambda x: x.cast("double") / n)
+def _unit_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id_col, norm, vn): ``l2_norm`` in one projection and
+    ``l2_normalize`` over that column in the next. Spark does no CSE
+    across a lambda, so a norm written inside the normalize lambda is
+    recomputed per element (O(dim^2) per row); ``l2_normalize`` reads
+    the norm twice, which keeps CollapseProject from inlining it. A zero
+    vector normalizes to zeros, under ANSI too."""
+    return df.select(
+        F.col(id_col), F.col(vec_col), l2_norm(vec_col).alias("norm")
+    ).select(id_col, "norm", l2_normalize(vec_col, "norm").alias("vn"))
 
 
 def _cell_scores_udf(centroids: list[list[float]], n_out: int):
@@ -268,29 +276,38 @@ def _cell_scores_udf(centroids: list[list[float]], n_out: int):
     interpreted per-row transform(C x dim dot) expression (~4 evaluations
     per vector in the IVF pipeline). ``n_out=1`` returns the best cell id
     (np.argmax == Catalyst array_position-of-max: both take the FIRST
-    maximum); ``n_out>1`` returns the n_out highest-scoring cells, ties
-    broken toward the higher cell index to match the reverse(array_sort)
-    probe ranking."""
+    maximum, so a zero vector lands in cell 0); ``n_out>1`` returns the
+    n_out highest-scoring cells, ties broken toward the higher cell index
+    to match the reverse(array_sort) probe ranking. A vector with no
+    finite score against every centroid (null, a length other than the
+    centroids', a NaN or infinite element) gets null: it has no cell."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     C = np.array(centroids, dtype=np.float64)
 
+    def scores(vn: pd.Series):
+        ok = vn.str.len().eq(C.shape[1]).to_numpy()
+        S = np.full((len(vn), C.shape[0]), np.nan)
+        if ok.any():
+            S[ok] = np.stack(vn[ok].to_numpy()) @ C.T
+        return S, ok & np.isfinite(S).all(axis=1)
+
     if n_out == 1:
         @pandas_udf("int")
         def best_cell(vn: pd.Series) -> pd.Series:
-            S = np.stack(vn.to_numpy()) @ C.T
-            return pd.Series(np.argmax(S, axis=1).astype("int32"))
+            S, ok = scores(vn)
+            return pd.Series(np.argmax(S, axis=1), dtype="Int32").where(ok)
         return best_cell
 
     @pandas_udf("array<int>")
     def probe_cells(vn: pd.Series) -> pd.Series:
-        S = np.stack(vn.to_numpy()) @ C.T
+        S, ok = scores(vn)
         # sort by (score desc, index desc): stable argsort over
         # index-descending columns
         order = np.argsort(-S[:, ::-1], axis=1, kind="stable")[:, :n_out]
-        cells = (C.shape[0] - 1) - order
-        return pd.Series(list(cells.astype("int32")))
+        cells = ((C.shape[0] - 1) - order).astype("int32")
+        return pd.Series([c if o else None for c, o in zip(cells, ok)])
     return probe_cells
 
 
@@ -318,7 +335,11 @@ def ivf_assignments(
     TakeOrdered(AndProject) — a limit pushed into a per-partition top-C
     plus a C-row driver merge — never a global sort of the corpus.
 
-    Returns (assignments DataFrame [id, vn, cluster], centroids).
+    Vectors without a cell (see ``_cell_scores_udf``) get a null
+    ``cluster`` and take no part in training; a zero vector has the unit
+    ``vn`` of zeros and lands in cell 0.
+
+    Returns (assignments DataFrame [id, norm, vn, cluster], centroids).
     """
     if n_centroids > MAX_CENTROIDS:
         raise ValueError(
@@ -335,13 +356,28 @@ def ivf_assignments(
     # Lloyd collects below materialize it, and the downstream candidate
     # join reads it two more times (query + neighbor sides). Spark evicts
     # it LRU when memory is needed.
-    normed = (
-        df.repartition(par, F.col(id_col))
-        .select(F.col(id_col), _normalized(vec_col).alias("vn"))
-        .cache()
+    normed = _unit_vectors(
+        df.repartition(par, F.col(id_col)), id_col, vec_col
+    ).cache()
+
+    # The cells live in the most common vector length (one small aggregate
+    # over the cached vectors), and only NaN-free vectors of that length
+    # seed them: a NaN or odd-length centroid would take every vector's
+    # cell away.
+    top = (
+        normed.filter(F.col("vn").isNotNull())
+        .groupBy(F.size("vn").alias("dim"))
+        .count()
+        .orderBy(F.desc("count"), F.desc("dim"))
+        .first()
     )
+    if top is None:
+        raise ValueError("ivf_assignments: every vector is null")
     seed_select = (
-        normed.select(F.md5(F.col(id_col).cast("string")).alias("h"), "vn")
+        normed.filter(
+            (F.size("vn") == top["dim"]) & F.forall("vn", lambda x: ~F.isnan(x))
+        )
+        .select(F.md5(F.col(id_col).cast("string")).alias("h"), "vn")
         .orderBy("h")
         .limit(n_centroids)
     )
@@ -353,6 +389,8 @@ def ivf_assignments(
             + seed_plan
         )
     centroids = [list(r.vn) for r in seed_select.collect()]
+    if not centroids:
+        raise ValueError("ivf_assignments: no NaN-free vector to seed the cells")
 
     for _ in range(iters):
         assigned = normed.withColumn(
@@ -651,9 +689,11 @@ def ivf_insert(
         .collect()
     )
     centroids = [list(r.centroid) for r in cents]
-    assigned = new_vectors.select(
-        F.col(id_col), _normalized(vec_col).alias("vn")
-    ).withColumn("cluster", _cell_scores_udf(centroids, 1)(F.col("vn")))
+    assigned = (
+        _unit_vectors(new_vectors, id_col, vec_col)
+        .select(id_col, "vn")
+        .withColumn("cluster", _cell_scores_udf(centroids, 1)(F.col("vn")))
+    )
     # observe above the exchange, as save_ivf_index does (see docstring)
     obs = Observation()
     (
@@ -697,50 +737,33 @@ def ivf_query_topk(
     vec_col: str,
     k: int = 3,
     n_probe: int = 2,
-    scorer: str = "catalyst",
+    scorer: str | None = None,
     exclude_same_id: bool = True,
 ) -> DataFrame:
     """Serve a query batch against a standing ``IvfIndex``: normalize the
     queries, pick each query's ``n_probe`` nearest cells against the
-    broadcast centroid table (one Arrow matmul per batch), equi-join the
-    probed cells' inverted-file rows, exact cosine, top-k per query.
-    The corpus is never rescanned — with the index loaded from its
-    partitioned form, only the probed cells' files are read.
+    broadcast centroid table (one Arrow matmul per batch), and rank the
+    probed cells' inverted-file rows by the fold's ``dot`` of unit
+    vectors (``_topk_pairs``). The raw corpus is never read: the inverted
+    file supplies both the cells' candidates and the rescore's vectors.
     ``exclude_same_id`` drops neighbor rows whose id equals the query id
     (the self-match when queries are drawn from the indexed corpus);
     disable it for disjoint id spaces where collisions are distinct
-    vectors — but note the ``arrow`` scorer always masks equal-id pairs
-    inside the matmul (use distinct id ranges with it)."""
+    vectors. A vector without a cell neither probes nor is found."""
+    # scorer: ignored; kept only because perfbench/wl_corpus.py passes it
+    unit, one = _unit_vectors(queries, id_col, vec_col), F.lit(1.0)
     probes = _cell_scores_udf(index.centroids, n_probe)(F.col("vn"))
     # n_probe=1 scores to a scalar best-cell, >1 to an array of cells
-    cluster = F.explode(probes) if n_probe > 1 else probes
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _normalized(vec_col).alias("vn")
-    ).select("query_id", "vn", cluster.alias("cluster"))
-    c = index.assignments.select(
-        F.col(id_col).alias("neighbor_id"), F.col("vn").alias("cv"), "cluster"
+    cells = F.explode(probes) if n_probe > 1 else probes
+    ix = index.assignments
+    return _topk_pairs(
+        _side(unit, id_col, "vn", "query_id", "q", one, cells),
+        _side(ix, id_col, "vn", "neighbor_id", "c", one, F.col("cluster")),
+        _side(unit, id_col, "vn", "query_id", "q", one),
+        _side(ix, id_col, "vn", "neighbor_id", "c", one),
+        k,
+        exclude_same_id,
     )
-    q = q.withColumnRenamed("vn", "qv")
-    if scorer == "arrow":
-        q2 = q.withColumnRenamed("cluster", "bucket").withColumn("qn", F.lit(1.0))
-        c2 = c.withColumnRenamed("cluster", "bucket").withColumn("cn", F.lit(1.0))
-        scored = _score_buckets_topk_arrow(q2, c2, k)
-    else:
-        scored = (
-            q.join(c, "cluster")
-            .withColumn(
-                "score",
-                F.aggregate(
-                    F.zip_with("qv", "cv", lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            )
-            .select("query_id", "neighbor_id", "score")
-        )
-    if exclude_same_id:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    return _dedup_and_rank_topk(scored, k)
 
 
 def ivf_topk(
@@ -751,52 +774,28 @@ def ivf_topk(
     n_centroids: int | None = None,
     n_probe: int = 2,
     iters: int = 2,
-    scorer: str = "catalyst",
 ) -> DataFrame:
     """IVF approximate all-pairs top-k: coarse k-means cells, queries probe
     their ``n_probe`` nearest cells, exact cosine within the probed cells.
 
-    The inverted-file analog of ``srp_bucket_ann``: candidates come from an
-    equi-join on cluster id — O(N * cell population * n_probe), never
+    The inverted-file analog of ``srp_bucket_ann``: candidates come from
+    the cells a query probes — O(N * cell population * n_probe), never
     O(N^2). ``n_centroids`` defaults to ~sqrt(N) (balanced cells). Scores
-    are cosines of the original vectors (dot of normalized copies) —
-    exactly comparable across cells. ``scorer="arrow"`` scores each cell
-    as one numpy matmul (vectors are pre-normalized, so unit norms feed
-    the shared bucket scorer); same trade-off as srp_bucket_ann's.
+    are the fold's ``dot`` of the normalized copies, i.e. cosines of the
+    original vectors — exactly comparable across cells.
     """
     if n_centroids is None:
         n_centroids = max(4, int(math.sqrt(df.count())))
     assigned, centroids = ivf_assignments(df, id_col, vec_col, n_centroids, iters)
-
-    probes = _cell_scores_udf(centroids, n_probe)(F.col("vn"))
-
-    q = assigned.select(
-        F.col(id_col).alias("query_id"),
-        F.col("vn").alias("qv"),
-        F.explode(probes).alias("cluster"),
+    one = F.lit(1.0)
+    probes = F.explode(_cell_scores_udf(centroids, n_probe)(F.col("vn")))
+    return _topk_pairs(
+        _side(assigned, id_col, "vn", "query_id", "q", one, probes),
+        _side(assigned, id_col, "vn", "neighbor_id", "c", one, F.col("cluster")),
+        _side(assigned, id_col, "vn", "query_id", "q", one),
+        _side(assigned, id_col, "vn", "neighbor_id", "c", one),
+        k,
     )
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col("vn").alias("cv"), "cluster"
-    )
-    if scorer == "arrow":
-        q2 = q.withColumnRenamed("cluster", "bucket").withColumn("qn", F.lit(1.0))
-        c2 = c.withColumnRenamed("cluster", "bucket").withColumn("cn", F.lit(1.0))
-        scored = _score_buckets_topk_arrow(q2, c2, k)
-    else:
-        scored = (
-            q.join(c, "cluster")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn(
-                "score",
-                F.aggregate(
-                    F.zip_with("qv", "cv", lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            )
-            .select("query_id", "neighbor_id", "score")
-        )
-    return _dedup_and_rank_topk(scored, k)
 
 
 def _srp_hyperplane(dim: int, bit: int) -> list[float]:
@@ -863,85 +862,66 @@ def _srp_table_frame(
     dim: int,
     nbits: int,
     n_tables: int,
-    hasher: str = "catalyst",
 ) -> DataFrame:
-    """Materialize (id, vec, norm, _b0.._b{L-1}) once: the frame feeds BOTH
-    join sides, and Catalyst does not share the SRP projection (L x nbits
-    dot products per row) across them — without this the corpus is scanned
-    and SRP-hashed twice. Table l uses the globally-numbered hyperplanes
-    [l*nbits, (l+1)*nbits) — disjoint deterministic draws.
+    """Materialize (id, vec, _norm, _b0.._b{L-1}) once: the frame feeds
+    BOTH candidate sides, so the corpus is scanned and SRP-hashed once.
+    Table l uses the globally-numbered hyperplanes [l*nbits, (l+1)*nbits)
+    — disjoint deterministic draws, the planes of ``_bucket_expr``.
 
-    ``hasher="arrow"`` computes all L*nbits sign bits (and the norm) as
-    ONE numpy matmul per Arrow batch instead of L*nbits interpreted HOF
-    folds per row — the fold form is the dominant stage of the SRP
-    queries at 100x data (88 interpreted 64-element folds per row for the
-    8-table paths) and pathologically JIT-bimodal on top. Same
-    deterministic +/-1 md5 hyperplanes; a bit can differ from the
-    Catalyst fold only when the true dot product sits within one rounding
-    ulp of zero (pairwise vs sequential summation), which moves a vector
-    to an equally-random neighboring bucket — harmless for the rows-only
-    ANN surfaces and for the recall certificates, whose hashed output is
-    the floor boolean, not the bucket contents (and whose subset property
-    comes from exact SCORING, not hashing). Agreement is pinned by
-    tests/test_llm_ops.py on the test corpus."""
-    # Repartition BEFORE the projection: a single-file scan arrives as one
-    # partition, which would run the hashing work per row on one core
-    # (measured 4x on the 64-dim corpus).
+    All L*nbits sign bits (and the numpy norm the candidate scorers
+    divide by) come from ONE numpy matmul per Arrow batch, not L*nbits
+    interpreted folds per row (88 64-element folds per row for the
+    8-table paths, and JIT-bimodal on top). A bit can differ from the
+    fold form only when the true dot product sits within one rounding
+    ulp of zero, which moves a vector to an equally random neighboring
+    bucket; the operators rescore from the raw vectors, so bucket
+    membership never reaches an emitted score. A null or wrong-length
+    vector is dropped (the fold would give it a null bucket, outside
+    every equi-join)."""
+    import numpy as np
+    import pandas as pd
+
+    planes = np.array(
+        [_srp_hyperplane(dim, b) for b in range(n_tables * nbits)],
+        dtype=np.float64,
+    )
+    id_t = df.schema[id_col].dataType.simpleString()
+    vec_t = df.schema[vec_col].dataType.simpleString()
+    schema = (
+        f"{id_col} {id_t}, {vec_col} {vec_t}, _norm double, "
+        + ", ".join(f"_b{t} string" for t in range(n_tables))
+    )
+
+    def hash_batches(it):
+        for pdf in it:
+            ok = pdf[vec_col].str.len().eq(dim).to_numpy()
+            if not ok.all():
+                pdf = pdf[ok].reset_index(drop=True)
+            if len(pdf) == 0:
+                continue
+            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            signs = (V @ planes.T) >= 0  # (rows, L*nbits)
+            out = {
+                id_col: pdf[id_col],
+                vec_col: pdf[vec_col],
+                "_norm": np.sqrt((V * V).sum(axis=1)),
+            }
+            for tbl in range(n_tables):
+                seg = signs[:, tbl * nbits : (tbl + 1) * nbits]
+                chars = np.where(seg, "1", "0").astype("U1")
+                out[f"_b{tbl}"] = (
+                    np.ascontiguousarray(chars).view(f"<U{nbits}").ravel()
+                )
+            yield pd.DataFrame(out)
+
+    # Repartition BEFORE the hashing: a single-file scan arrives as one
+    # partition, which would hash on one core.
     par = df.sparkSession.sparkContext.defaultParallelism
-    if hasher == "arrow":
-        import numpy as np
-        import pandas as pd
-
-        planes = np.array(
-            [_srp_hyperplane(dim, b) for b in range(n_tables * nbits)],
-            dtype=np.float64,
-        )
-        id_t = df.schema[id_col].dataType.simpleString()
-        vec_t = df.schema[vec_col].dataType.simpleString()
-        schema = (
-            f"{id_col} {id_t}, {vec_col} {vec_t}, _norm double, "
-            + ", ".join(f"_b{t} string" for t in range(n_tables))
-        )
-
-        def hash_batches(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                # Null / wrong-length vectors would make np.stack raise;
-                # drop them instead, mirroring the Catalyst fold path where
-                # such a row gets a null bucket and falls out of the
-                # downstream equi-join anyway (same final pair/match set).
-                ok = pdf[vec_col].str.len().eq(dim).fillna(False).to_numpy()
-                if not ok.all():
-                    pdf = pdf[ok].reset_index(drop=True)
-                    if len(pdf) == 0:
-                        continue
-                V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                signs = (V @ planes.T) >= 0  # (rows, L*nbits)
-                out = {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "_norm": np.sqrt((V * V).sum(axis=1)),
-                }
-                for tbl in range(n_tables):
-                    seg = signs[:, tbl * nbits : (tbl + 1) * nbits]
-                    chars = np.where(seg, "1", "0").astype("U1")
-                    out[f"_b{tbl}"] = (
-                        np.ascontiguousarray(chars).view(f"<U{nbits}").ravel()
-                    )
-                yield pd.DataFrame(out)
-
-        return (
-            df.repartition(par)
-            .mapInPandas(hash_batches, schema)
-            .transform(eager_checkpoint)
-        )
-    cols = [F.col(id_col), F.col(vec_col), l2_norm(vec_col).alias("_norm")]
-    for tbl in range(n_tables):
-        cols.append(
-            _bucket_expr(vec_col, dim, nbits, bit_offset=tbl * nbits).alias(f"_b{tbl}")
-        )
-    return df.repartition(par).select(*cols).transform(eager_checkpoint)
+    return (
+        df.repartition(par)
+        .mapInPandas(hash_batches, schema)
+        .transform(eager_checkpoint)
+    )
 
 
 def _pin_bucket_partitions(side: DataFrame) -> DataFrame:
@@ -988,12 +968,10 @@ def srp_bucket_ann(
     probe_bits: int = 1,
     max_bucket_size: int | None = 4096,
     n_tables: int = 1,
-    scorer: str = "catalyst",
-    hasher: str = "catalyst",
 ) -> DataFrame:
     """Approximate all-pairs top-k: candidates share an SRP bucket in one of
     ``n_tables`` independent hash tables (with 1-bit multi-probe on the
-    query side), scored exactly within the bucket.
+    query side), and ``_topk_pairs`` ranks them with the exact fold.
 
     ``nbits=None`` sizes the code from ``df.count()`` (one cheap
     metadata-backed job) so buckets stay ~``target_bucket_size`` at any N.
@@ -1001,28 +979,18 @@ def srp_bucket_ann(
     EVERY table splits the pair — the knob to spend for recall when the
     similarity floor is far from 1 (wide angles split often). Cost grows
     linearly in L while staying sum-of-bucket^2 bounded, never N^2.
-
-    ``scorer="arrow"`` scores each bucket as one numpy matmul instead of
-    the per-pair interpreted Catalyst expression (~10x on the scoring
-    stage; see the Arrow-scorer block below). Same pairs, same ranking;
-    scores differ from the Catalyst fold only in final-ulp rounding, so
-    hash-checked callers keep the default.
     """
     if nbits is None:
         nbits = pick_nbits(df.count(), target_bucket_size)
 
-    bucketed = _srp_table_frame(
-        df, id_col, vec_col, dim, nbits, n_tables, hasher=hasher
-    )
+    bucketed = _srp_table_frame(df, id_col, vec_col, dim, nbits, n_tables)
 
     # Candidate (neighbor) side, optionally capped per bucket. The cap is
     # deterministic — md5(id) order — so the candidate set is identical on
     # any cluster size.
-    cand = bucketed.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.col("_norm").alias("cn"),
-        F.explode(_member_keys(nbits, n_tables)).alias("bucket"),
+    cand = _side(
+        bucketed, id_col, vec_col, "neighbor_id", "c", F.col("_norm"),
+        F.explode(_member_keys(nbits, n_tables)),
     )
     if max_bucket_size is not None:
         wcap = Window.partitionBy("bucket").orderBy(
@@ -1037,28 +1005,17 @@ def srp_bucket_ann(
     # Query side probes its own bucket plus every bucket at Hamming
     # distance <= probe_bits, per table (probe_bits=1 -> L*(nbits+1)
     # probes per vector).
-    q = bucketed.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.col("_norm").alias("qn"),
-        F.explode(_probe_keys(nbits, n_tables, probe_bits)).alias("bucket"),
+    q = _side(
+        bucketed, id_col, vec_col, "query_id", "q", F.col("_norm"),
+        F.explode(_probe_keys(nbits, n_tables, probe_bits)),
     )
-
-    # Score before deduping multi-probe/multi-table hits: the dedup shuffle
-    # then moves (ids, score), never the vectors themselves. A pair
-    # surfacing via two buckets scores identically, so keeping either row
-    # is exact.
-    if scorer == "arrow":
-        scored = _score_buckets_topk_arrow(q, cand, k)
-    else:
-        scored = (
-            _pin_bucket_partitions(q)
-            .join(_pin_bucket_partitions(cand), "bucket")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("score", cosine_from_norms("qv", "cv", "qn", "cn"))
-            .select("query_id", "neighbor_id", "score")
-        )
-    return _dedup_and_rank_topk(scored, k)
+    return _topk_pairs(
+        q,
+        cand,
+        _side(bucketed, id_col, vec_col, "query_id", "q"),
+        _side(bucketed, id_col, vec_col, "neighbor_id", "c"),
+        k,
+    )
 
 
 def srp_near_duplicate_pairs(
@@ -1072,7 +1029,6 @@ def srp_near_duplicate_pairs(
     probe_bits: int = 1,
     max_bucket_size: int | None = 4096,
     n_tables: int = 1,
-    hasher: str = "catalyst",
 ) -> DataFrame:
     """The SCALE path for ``near_duplicate_pairs``: candidate pairs share an
     SRP bucket in one of ``n_tables`` independent tables (one side
@@ -1094,9 +1050,7 @@ def srp_near_duplicate_pairs(
     if nbits is None:
         nbits = pick_nbits(df.count(), target_bucket_size)
 
-    bucketed = _srp_table_frame(
-        df, id_col, vec_col, dim, nbits, n_tables, hasher=hasher
-    )
+    bucketed = _srp_table_frame(df, id_col, vec_col, dim, nbits, n_tables)
 
     b_side = bucketed.select(
         F.col(id_col).alias("id_b"),
@@ -1123,7 +1077,7 @@ def srp_near_duplicate_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Arrow bucket scorers — the vectorized escape hatch for bucket scoring.
+# Arrow bucket scorers — the CANDIDATE stage of every operator above.
 #
 # The Catalyst cosine (functions/vectors.cosine_from_norms) is a
 # higher-order-function chain, which Spark evaluates INTERPRETED (HOF
@@ -1134,11 +1088,9 @@ def srp_near_duplicate_pairs(
 # instead of an interpreted expression tree (~10x at 64 dims).
 #
 # numpy's pairwise summation differs from the Catalyst fold by final-ulp
-# rounding. The top-k scorer serves the approximate top-k paths
-# (scorer="arrow"); hash-checked top-k (brute_force_topk's default) stays
-# on the fold. The pair scorer is the CANDIDATE stage of every threshold
-# pair miner: _threshold_pairs rescores its survivors with the fold, so
-# the fold alone decides the threshold boundary.
+# rounding, so neither scorer emits a score: each forwards its candidates
+# with CANDIDATE_MARGIN to spare, and the fold rescores them and decides
+# the boundary (_topk_pairs, _threshold_pairs).
 #
 # Scale shape: Python-call count == bucket count (bounded work per call:
 # max_bucket_size caps the candidate matrix, bucket_size x (nbits+1)
@@ -1146,59 +1098,68 @@ def srp_near_duplicate_pairs(
 # membership, never per pair. Both sides keep the pinned numbered
 # repartition on bucket, which satisfies the cogroup's distribution
 # requirement and is exempt from AQE coalescing (see
-# _pin_bucket_partitions).
+# _pin_bucket_partitions). A null bucket (a vector without an IVF cell)
+# matches nothing.
 # ---------------------------------------------------------------------------
 
 
-def _score_buckets_topk_arrow(q: DataFrame, cand: DataFrame, k: int) -> DataFrame:
-    """Per-bucket top-k cosine via one matmul per bucket. Emits each
-    query's k best neighbors WITHIN each bucket (superset of the global
-    top-k: a globally-top-k neighbor is top-k in every bucket containing
-    it); callers dedup and re-rank globally. Ties break by neighbor_id
-    ascending, matching the deterministic global window."""
+def _cogroup_buckets(
+    left: DataFrame, right: DataFrame, score, schema: str
+) -> DataFrame:
+    """Apply ``score(left_bucket, right_bucket)`` to every bucket the two
+    sides share. The right key gets a fresh name: a self-cogroup of two
+    frames derived from one scan dedups shared exprIds and would prune the
+    right key out of the Arrow frame (see operators/joins.as_of_join_cogroup)."""
+    right_r = right.filter(F.col("bucket").isNotNull()).withColumnRenamed(
+        "bucket", "bucket_r"
+    )
+    return (
+        _pin_bucket_partitions(left.filter(F.col("bucket").isNotNull()))
+        .groupBy("bucket")
+        .cogroup(right_r.repartition(
+            left.sparkSession.sparkContext.defaultParallelism, F.col("bucket_r")
+        ).groupBy("bucket_r"))
+        .applyInPandas(score, schema)
+    )
+
+
+def _score_buckets_topk_arrow(
+    q: DataFrame, cand: DataFrame, k: int, exclude_self: bool
+) -> DataFrame:
+    """Per-bucket top-k candidates via one matmul per bucket: emits
+    (query_id, neighbor_id) for every pair whose score is not below the
+    query's k-th best finite score in the bucket minus
+    ``CANDIDATE_MARGIN``, and every pair it cannot score finitely — NaN
+    elements and zero norms (NaN or null in the fold), null vectors and
+    unequal lengths (null in the fold, ranked last) — so the fold ranks
+    them. A query with fewer than k finite scores forwards the whole
+    bucket. Equal ids are masked only when ``exclude_self``."""
     import numpy as np
     import pandas as pd
 
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "score": []})
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        Q = np.stack(left["qv"].to_numpy()).astype(np.float64)
-        C = np.stack(right["cv"].to_numpy()).astype(np.float64)
         qid = left["query_id"].to_numpy()
         nid = right["neighbor_id"].to_numpy()
-        # columns in neighbor_id order so a stable sort on -score breaks
-        # ties by neighbor_id ascending
-        nido = np.argsort(nid, kind="stable")
-        nid_s, C = nid[nido], C[nido]
-        cn = right["cn"].to_numpy()[nido]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            S = (Q @ C.T) / np.outer(left["qn"].to_numpy(), cn)
-        S[qid[:, None] == nid_s[None, :]] = -np.inf  # mask self-pairs
-        kk = min(k, S.shape[1])
-        top = np.argsort(-S, axis=1, kind="stable")[:, :kk]
-        out_s = np.take_along_axis(S, top, axis=1).ravel()
-        keep = out_s > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qid, kk)[keep],
-                "neighbor_id": nid_s[top].ravel()[keep],
-                "score": out_s[keep],
-            }
-        )
+        S = np.full((len(qid), len(nid)), np.nan)
+        lq, lc = left["qv"].str.len(), right["cv"].str.len()
+        for dim in set(lq.dropna()) & set(lc.dropna()):
+            qi, ci = np.flatnonzero(lq == dim), np.flatnonzero(lc == dim)
+            Q = np.stack(left["qv"].to_numpy()[qi]).astype(np.float64)
+            C = np.stack(right["cv"].to_numpy()[ci]).astype(np.float64)
+            norms = np.outer(left["qn"].to_numpy()[qi], right["cn"].to_numpy()[ci])
+            with np.errstate(divide="ignore", invalid="ignore"):
+                S[np.ix_(qi, ci)] = (Q @ C.T) / norms
+        keep = np.ones(S.shape, dtype=bool)
+        if exclude_self:
+            keep = qid[:, None] != nid[None, :]
+        finite = np.where(keep & np.isfinite(S), S, -np.inf)
+        kth = np.full(len(qid), -np.inf)
+        if len(nid) >= k:
+            kth = -np.partition(-finite, k - 1, axis=1)[:, k - 1]
+        ii, jj = np.nonzero(keep & ~(S < (kth - CANDIDATE_MARGIN)[:, None]))
+        return pd.DataFrame({"query_id": qid[ii], "neighbor_id": nid[jj]})
 
-    # fresh key name on the right side: self-cogroup of two frames derived
-    # from one scan dedups shared exprIds and would prune the right key out
-    # of the Arrow frame (see operators/joins.as_of_join_cogroup)
-    cand_r = cand.withColumnRenamed("bucket", "bucket_r")
-    return (
-        _pin_bucket_partitions(q)
-        .groupBy("bucket")
-        .cogroup(cand_r.repartition(
-            q.sparkSession.sparkContext.defaultParallelism, F.col("bucket_r")
-        ).groupBy("bucket_r"))
-        .applyInPandas(score, "query_id long, neighbor_id long, score double")
-    )
+    return _cogroup_buckets(q, cand, score, "query_id long, neighbor_id long")
 
 
 def _score_buckets_pairs_arrow(
@@ -1229,15 +1190,7 @@ def _score_buckets_pairs_arrow(
             out.append(pd.DataFrame({"id_a": ida[ii], "id_b": idb[jj]}))
         return pd.concat(out) if out else pd.DataFrame({"id_a": [], "id_b": []})
 
-    b_r = b_side.withColumnRenamed("bucket", "bucket_r")
-    return (
-        _pin_bucket_partitions(a_side)
-        .groupBy("bucket")
-        .cogroup(b_r.repartition(
-            a_side.sparkSession.sparkContext.defaultParallelism, F.col("bucket_r")
-        ).groupBy("bucket_r"))
-        .applyInPandas(score, "id_a long, id_b long")
-    )
+    return _cogroup_buckets(a_side, b_side, score, "id_a long, id_b long")
 
 
 # ---------------------------------------------------------------------------
@@ -1361,10 +1314,11 @@ def ivfpq_topk(
     candidate set (equi-join on cluster, like ivf_topk), but candidates
     are scored by ASYMMETRIC DISTANCE COMPUTATION — m table lookups per
     pair against the query's precomputed LUT instead of a dim-wide dot —
-    then only the top ``rerank_factor * k`` ADC survivors per query are
-    re-ranked with the exact cosine. Emitted scores are therefore EXACT
-    for every returned pair, while the per-pair scan cost drops from
-    ``dim`` multiplies to ``m`` lookups.
+    then only the top ``rerank_factor * k`` ADC survivors per query go
+    to the shared rescore (``_rescore_topk``: the fold's dot of the unit
+    vectors). Emitted scores are therefore EXACT for every returned pair,
+    while the per-pair scan cost drops from ``dim`` multiplies to ``m``
+    lookups.
 
     At 100 TB the corpus side of the candidate join carries (id, cluster,
     m int8-sized codes) — the 4x-quantized-again form of the int8 path in
@@ -1435,10 +1389,10 @@ def ivfpq_topk(
             {"query_id": qid[keep], "neighbor_id": nid[keep], "adc": adc[keep]}
         )
 
-    # One exchange for dedup + ADC rank (the _dedup_and_rank_topk
-    # pattern): repartitioning on query_id satisfies both the defensive
-    # pair dedup (each corpus vector lives in exactly one cell, so
-    # duplicates cannot actually occur) and the window distribution.
+    # One exchange for dedup + ADC rank: repartitioning on query_id
+    # satisfies both the defensive pair dedup (each corpus vector lives in
+    # exactly one cell, so duplicates cannot actually occur) and the
+    # window distribution.
     cand = (
         q.groupBy("cluster")
         .cogroup(corpus.groupBy("cluster"))
@@ -1450,23 +1404,16 @@ def ivfpq_topk(
     )
     w_adc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
     shortlist = cand.withColumn("arank", F.row_number().over(w_adc)).filter(
-        F.col("arank") <= rerank_factor * k
+        F.col("arank") <= shortlist_n
     )
-    # Exact re-rank: the original (normalized) vectors join back onto the
-    # tiny shortlist only — rerank_factor*k rows per query.
-    qvecs = assigned.select(F.col(id_col).alias("query_id"), F.col("vn").alias("qv"))
-    cvecs = assigned.select(F.col(id_col).alias("neighbor_id"), F.col("vn").alias("cv"))
-    exact = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        shortlist.join(qvecs, "query_id")
-        .join(cvecs, "neighbor_id")
-        .withColumn("score", exact)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    # Exact re-rank of the rerank_factor*k shortlist only: the fold's dot
+    # of the unit vectors.
+    one = F.lit(1.0)
+    return _rescore_topk(
+        shortlist.select("query_id", "neighbor_id"),
+        _side(assigned, id_col, "vn", "query_id", "q", one),
+        _side(assigned, id_col, "vn", "neighbor_id", "c", one),
+        k,
     )
 
 
@@ -1512,25 +1459,24 @@ def semdedup_pairs(
         n_clusters = max(2, math.isqrt(df.count()))
     assigned, centroids = ivf_assignments(df, id_col, vec_col, n_clusters, iters)
     if n_probe <= 1:
-        membership = assigned.select(
-            F.col(id_col), "vn", F.col("cluster").alias("bucket")
-        )
+        bucket = F.col("cluster")
     else:
-        membership = assigned.select(
-            F.col(id_col),
-            "vn",
-            F.explode(
-                _cell_scores_udf(centroids, min(n_probe, n_clusters))(F.col("vn"))
-            ).alias("bucket"),
+        bucket = F.explode(
+            _cell_scores_udf(centroids, min(n_probe, n_clusters))(F.col("vn"))
         )
-
+    # The unit vectors carry norm 1, except the zero vector: its norm 0
+    # makes numpy's score 0/0 = NaN, which forwards its pairs to the fold
+    # exactly as the raw-vector miners do (DIVIDE_BY_ZERO under ANSI).
+    membership = assigned.select(
+        F.col(id_col), "vn", F.signum("norm").alias("unit"), bucket.alias("bucket")
+    )
     a_side = membership.select(
         F.col(id_col).alias("id_a"), F.col("vn").alias("va"),
-        F.lit(1.0).alias("na"), "bucket",
+        F.col("unit").alias("na"), "bucket",
     )
     b_side = membership.select(
         F.col(id_col).alias("id_b"), F.col("vn").alias("vb"),
-        F.lit(1.0).alias("nb"), "bucket",
+        F.col("unit").alias("nb"), "bucket",
     )
     return _threshold_pairs(df, id_col, vec_col, a_side, b_side, threshold)
 

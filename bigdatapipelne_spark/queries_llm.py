@@ -501,8 +501,9 @@ def _sql_cosine(a: str, b: str) -> str:
 )
 def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for a 10-vector query set against the full corpus
-    (operators/similarity.py: brute_force_topk — query side broadcast,
-    corpus never shuffled)."""
+    (operators/similarity.py: brute_force_topk — numpy candidates per
+    query shard, ranked by the Catalyst fold the oracle's SQL cosine
+    matches bit for bit)."""
     # corpus side widened: the embeddings table is also a single row
     # group, so the dim-wide cosine folds otherwise run one-core
     emb = _widen_narrow_input(t(spark, sf_dir, "embeddings"))
@@ -550,15 +551,15 @@ def embedding_near_dup_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul, then rescored and thresholded with the exact fold — never
     O(N^2), and the interpreted expression runs per candidate, not per
     bucket pair. The 88 sign bits themselves are also one matmul per
-    Arrow batch (hasher="arrow"): the interpreted HOF fold form was the
-    dominant — and JIT-bimodal — stage of the round-8 sf10 cell. Recall
-    vs the exact baseline and hasher agreement are asserted in
-    tests/test_llm_ops.py; the recall bound is also hash-checked via
+    Arrow batch: the interpreted HOF fold form was the dominant — and
+    JIT-bimodal — stage of the round-8 sf10 cell. Recall vs the exact
+    baseline and agreement of the sign bits with the fold form are
+    asserted in tests/test_llm_ops.py; the recall bound is also hash-checked via
     embedding_ann_recall below (same configuration)."""
     emb = t(spark, sf_dir, "embeddings")
     return srp_near_duplicate_pairs(
         emb, "vec_id", "embedding", dim=EMBEDDING_DIM, threshold=0.42,
-        n_tables=8, hasher="arrow",
+        n_tables=8,
     )
 
 
@@ -602,7 +603,7 @@ def embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # certificate bounds the candidates that path actually generates.
     ann = srp_near_duplicate_pairs(
         emb, "vec_id", "embedding", dim=EMBEDDING_DIM, threshold=0.42,
-        n_tables=8, hasher="arrow",
+        n_tables=8,
     )
     found = ann.join(exact, ["id_a", "id_b"], "left_semi")
     ne = exact.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
@@ -812,7 +813,6 @@ def embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     return srp_bucket_ann(
         emb, "vec_id", "embedding", dim=EMBEDDING_DIM, k=5, n_tables=4,
-        scorer="arrow", hasher="arrow",
     )
 
 
@@ -829,10 +829,9 @@ def embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scales as sqrt(N), keeping candidates at N*sqrt(N)*probes. A pinned
     # cell count is a scale bug — the round-6 sf10 rehearsal measured the
     # old 32-cell form at 6k-vector cells, ~2.5B interpreted pair scores.
-    # Arrow scorer: one numpy matmul per cell instead of the interpreted
-    # per-pair HOF fold (the certified-exact paths keep the Catalyst fold;
-    # this rows-only path takes the 10-100x batch win).
-    return ivf_topk(emb, "vec_id", "embedding", k=5, iters=1, scorer="arrow")
+    # Each cell's candidates come from one numpy matmul; the fold scores
+    # only the few that can reach a query's top 5.
+    return ivf_topk(emb, "vec_id", "embedding", k=5, iters=1)
 
 
 # ---------------------------------------------------------------------------
@@ -865,21 +864,22 @@ def _topk_recall_certificate(
 ) -> DataFrame:
     """(n_exact_pairs, recall_ge_floor) from an exact in-plan top-5 twin.
 
-    The twin scores via the Arrow matmul path (scorer="arrow"): the
-    certificate compares pair SETS against a floor with margin, so the
-    fold-vs-BLAS final-ulp rank swaps that forbid Arrow on score-hashed
-    queries are harmless here — and the interpreted per-pair fold would
-    otherwise dominate the whole sweep (49 s -> ~4 s at sf0.1)."""
+    The twin is ``brute_force_topk``, the exact fold top-k that
+    embedding_topk hash-checks: numpy finds each query's candidates in
+    one matmul and the fold ranks only those, so the twin's pairs are
+    the oracle's pairs without an interpreted per-pair fold over C^2
+    pairs (which would dominate the whole sweep: 49 s -> ~4 s at
+    sf0.1)."""
     # The exact twin (O(C^2) matmul) feeds BOTH the semi-join probe and
     # the n_exact_pairs count; without a materialization barrier Catalyst
     # plans it as two independent subtrees and the quadratic scoring runs
-    # twice per certificate (guide §7.2, duplicated subtrees — the
-    # "before" plans in plans/r14/ show the doubled CartesianProduct).
+    # twice per certificate (guide §7.2, duplicated subtrees; the
+    # doubled subtree showed as two CartesianProducts in the plan).
     # One eager localCheckpoint of the k*C-row pair set halves the cell.
     exact = eager_checkpoint(
-        brute_force_topk(
-            emb, emb, "vec_id", "embedding", k=5, scorer="arrow"
-        ).select("query_id", "neighbor_id")
+        brute_force_topk(emb, emb, "vec_id", "embedding", k=5).select(
+            "query_id", "neighbor_id"
+        )
     )
     found = ann.select("query_id", "neighbor_id").join(
         exact, ["query_id", "neighbor_id"], "left_semi"
@@ -929,7 +929,6 @@ def ann_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < TOPK_RECALL_CAP)
     ann = srp_bucket_ann(
         emb, "vec_id", "embedding", dim=EMBEDDING_DIM, k=5, n_tables=8,
-        scorer="arrow", hasher="arrow",
     )
     return _topk_recall_certificate(emb, ann, ANN_TOPK_RECALL_FLOOR)
 
@@ -944,7 +943,6 @@ def ivf_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < TOPK_RECALL_CAP)
     ann = ivf_topk(
         emb, "vec_id", "embedding", k=5, n_centroids=16, n_probe=4, iters=1,
-        scorer="arrow",
     )
     return _topk_recall_certificate(emb, ann, IVF_TOPK_RECALL_FLOOR)
 
@@ -973,7 +971,7 @@ def ivf_index_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     save_ivf_index(ix, "vec_id", root)
     ann = ivf_query_topk(
         emb, load_ivf_index(spark, root), "vec_id", "embedding",
-        k=5, n_probe=4, scorer="arrow",
+        k=5, n_probe=4,
     )
     return _topk_recall_certificate(emb, ann, IVF_TOPK_RECALL_FLOOR)
 
@@ -1017,7 +1015,7 @@ def ivf_insert_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ann = ivf_query_topk(
         emb, load_ivf_index(spark, root), "vec_id", "embedding",
-        k=5, n_probe=4, scorer="arrow",
+        k=5, n_probe=4,
     )
     return _topk_recall_certificate(emb, ann, IVF_TOPK_RECALL_FLOOR)
 
@@ -1088,7 +1086,7 @@ def managed_ivf_insert_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ann = ivf_query_topk(
         emb, current_ivf_index(spark, mroot), "vec_id", "embedding",
-        k=5, n_probe=4, scorer="arrow",
+        k=5, n_probe=4,
     )
     return _topk_recall_certificate(emb, ann, IVF_TOPK_RECALL_FLOOR)
 

@@ -75,7 +75,6 @@ def test_no_cartesian_or_rowwise_python_on_registered_paths(spark):
         "ivf_insert_topk_recall",  # capped exact top-k twin inside the certificate
         "managed_ivf_insert_recall",  # capped exact top-k twin inside the certificate
         "ivfpq_topk_recall",  # capped exact top-k twin inside the certificate
-        "embedding_topk",
         "q11_value_concentration",
         "q22_idle_customers",
         "tfidf_top_terms",
@@ -222,31 +221,39 @@ def test_chunk_dup_plan_is_single_scan_no_join(spark):
     assert p.count("Window") >= 1, p
 
 
-def test_dedup_and_rank_topk_is_single_exchange(spark):
-    """The round-10 ANN fusion: one hash repartition on query_id must
-    satisfy BOTH the (query, neighbor) dedup aggregate (subset-key
-    clustering) and the rank window's distribution — if Catalyst ever
-    stops accepting the subset-key clustering (or someone reorders the
-    operators), a second Exchange appears and the 48M-row scored set
-    shuffles twice again."""
+def test_rescore_topk_is_single_exchange(spark):
+    """The top-k rescore over broadcastable vector sides: one hash
+    repartition on query_id must satisfy the (query, neighbor) dedup
+    aggregate (subset-key clustering), the query-side join and the rank
+    window's distribution — if Catalyst ever stops accepting the
+    subset-key clustering (or someone reorders the operators), a second
+    Exchange appears and the candidate set shuffles twice."""
     from pyspark.sql import functions as F
 
-    from bigdatapipelne_spark.operators.similarity import _dedup_and_rank_topk
+    from bigdatapipelne_spark.operators.similarity import _rescore_topk
 
-    scored = spark.range(1000).select(
-        (F.col("id") % 10).alias("query_id"),
-        (F.col("id") % 7).alias("neighbor_id"),
-        (F.col("id") % 3).cast("double").alias("score"),
+    cand = spark.range(1000).select(
+        (F.col("id") % 10).alias("query_id"), (F.col("id") % 7).alias("neighbor_id")
+    )
+    vecs = spark.range(10).select(
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("v"),
+        F.lit(1.0).alias("n"),
+        F.col("id"),
     )
     plan_str = (
-        _dedup_and_rank_topk(scored, 3)
+        _rescore_topk(
+            cand,
+            vecs.select(F.col("id").alias("query_id"), F.col("v").alias("qv"),
+                        F.col("n").alias("qn")),
+            vecs.select(F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
+                        F.col("n").alias("cn")),
+            3,
+        )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert plan_str.count("Exchange") - plan_str.count("ReusedExchange") == 1, (
-        plan_str
-    )
+    assert plan_str.count("Exchange hashpartitioning") == 1, plan_str
 
 
 def test_asof_join_is_window_not_range_join(spark):
